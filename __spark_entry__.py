@@ -201,7 +201,7 @@ def _kg_turn_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG growth curve (round 5): newly-minted canonical triples per
-    epoch-week of first assertion + running total — the extraction
+    hourly bucket of first assertion + running total — the extraction
     monitoring product of a continuously-built KG."""
     from rdfcmap_spark.plans.pipeline import triple_growth, triple_timeline
 
@@ -219,28 +219,12 @@ def _kg_conflicts_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _synth_identity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sameAs ∪ shared-identifier star edges from the synthetic transcripts
-    (the pipeline's exact identity-edge derivation, shared by the
-    canonical-mapping and incremental-canonicalization driver queries)."""
-    from rdfcmap_spark.operators import canonicalize
-    from rdfcmap_spark.plans.pipeline import linked_sentences
-    from rdfcmap_spark import vocab
-    from rdfcmap_spark.functions.literals import literal_cols
+    (the pipeline's identity layers, shared by the canonical-mapping and
+    incremental-canonicalization queries)."""
+    from rdfcmap_spark.plans import pipeline as P
 
-    sent = linked_sentences(_synth_transcripts(spark, sf_dir), None)
-    sameas = sent.filter(
-        (F.col("form") == "relation") & (F.col("pred_iri") == vocab.OWL_SAME_AS)
-        & F.col("obj_entity").isNotNull()
-    ).select(F.col("subj_entity").alias("a"), F.col("obj_entity").alias("b"))
-    lit_token = F.concat(F.lit('"'), F.col("lex"), F.lit('"^^xsd:'), F.col("dt_local"))
-    obj_lex, _, lex_valid = literal_cols(lit_token)
-    idents = (
-        sent.filter(F.col("form") == "literal")
-        .withColumn("obj_lexical", obj_lex)
-        .withColumn("lex_valid", F.coalesce(lex_valid, F.lit(False)))
-        .filter((F.col("pred_iri") == vocab.DCT + "identifier") & F.col("lex_valid"))
-        .select(F.col("subj_entity").alias("entity_id"), F.col("obj_lexical").alias("value"))
-    )
-    return canonicalize.identity_edges(sameas, idents)
+    sent = P.linked_sentences(_synth_transcripts(spark, sf_dir))
+    return P.identity_edges(P.identity_rows(sent))
 
 
 def _kg_canonical_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4058,8 +4042,8 @@ SELECT prev_tool, tool, count(*) AS n_transitions FROM seq GROUP BY 1, 2
         "WITH " + _TR_CTE + """
 SELECT conv_id, turn_idx, role, text, n_tokens, cum_tokens FROM (
   SELECT conv_id, turn_idx, role, text, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
+         CAST(sum(n_tokens) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
   FROM (SELECT *,
           CAST(len(regexp_extract_all(coalesce(text, ''), '\\S+')) + 1 AS BIGINT)
             AS n_tokens

@@ -231,7 +231,7 @@ def main() -> None:
     spark = build_session(cpus=cpus, app_name="rdfcmap_spark_bench")
 
     queries = entrymod.queries()
-    # two probe samples before the pipeline + one after guarantee >=3
+    # one probe sample before the pipeline + two after guarantee >=3
     # samples on every code path (the PIPELINE_ONLY path previously had 2,
     # whose "median" was the max — r4 ADVICE)
     drift_samples = [drift_probe(spark, sf_dir, queries)]

@@ -14,7 +14,9 @@ Format support (raises ``ValueError`` outside it — loud, not lossy):
   ``data`` must not break the parse);
 * ``fmt `` PCM (format tag 1), 16-bit signed little-endian, any channel
   count / sample rate; interleaved frames -> (n_frames, n_channels)
-  int16 array.
+  int16 array;
+* a truncated ``data`` chunk or a ``fmt `` chunk under 16 bytes raises
+  ``ValueError``.
 
 Scale posture: identical to the image codec — decode is per-payload
 Python inside Arrow ``mapInPandas`` batches; swapping in a C-accelerated
@@ -58,10 +60,14 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
         (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
         body = payload[pos + 8 : pos + 8 + size]
         if tag == b"fmt ":
+            if len(body) < 16:
+                raise ValueError(f"WAV fmt chunk is {len(body)} bytes, under 16")
             fmt_tag, ch, rate, _br, _ba, bits = struct.unpack("<HHIIHH", body[:16])
-            if fmt_tag != 1 or bits != 16:
-                raise ValueError(f"unsupported WAV: format={fmt_tag} bits={bits}")
+            if fmt_tag != 1 or bits != 16 or ch == 0:
+                raise ValueError(f"unsupported WAV: format={fmt_tag} bits={bits} channels={ch}")
         elif tag == b"data":
+            if len(body) < size:
+                raise ValueError(f"WAV data chunk truncated: {len(body)} of {size} bytes")
             data = body
         pos += 8 + size + (size & 1)  # RIFF chunks are word-aligned
     if rate is None or data is None:

@@ -12,7 +12,8 @@ cycles through all five scanline filter types so a corpus round trip
 exercises every un-filter branch of the decoder, and the BMP encoder
 writes the spec's bottom-up rows with 4-byte padding.
 
-Format support (raises ``ValueError`` outside it — loud, not lossy):
+Format support (raises ``ValueError`` outside it — loud, not lossy —
+including truncated or corrupt payloads):
 
 * PNG: bit depth 8, color types 0 (grayscale), 2 (RGB), 6 (RGBA);
   all five filter types (None/Sub/Up/Average/Paeth, RFC 2083 §6);
@@ -219,9 +220,13 @@ def decode_image(payload: bytes) -> tuple[str, np.ndarray]:
     """Sniff + decode: returns ``(kind, pixels)`` with kind ``'png'`` or
     ``'bmp'`` and pixels an (h, w, channels) uint8 array (channels 1/3/4).
     Raises ``ValueError`` on anything else — corrupt payloads surface as
-    per-row nulls at the call site, never silent garbage."""
-    if payload[:8] == PNG_MAGIC:
-        return "png", _decode_png(payload)
-    if payload[:2] == b"BM":
-        return "bmp", _decode_bmp(payload)
+    per-row nulls at the call site, never silent garbage (a truncated
+    header or compressed stream raises ``ValueError`` too, not the
+    ``struct``/``zlib`` error underneath)."""
+    for kind, magic, decode in (("png", PNG_MAGIC, _decode_png), ("bmp", b"BM", _decode_bmp)):
+        if payload[: len(magic)] == magic:
+            try:
+                return kind, decode(payload)
+            except (struct.error, zlib.error) as e:
+                raise ValueError(f"corrupt {kind.upper()} payload: {e}") from e
     raise ValueError("unrecognized image payload")

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdfcmap_spark.schemas import TRIPLES
+from rdfcmap_spark.schemas import TRIPLE_KEY, TRIPLES
 
 
 def identity_edges(sameas: DataFrame, idents: DataFrame) -> DataFrame:
@@ -405,21 +405,14 @@ def connected_components(
 
 
 def rewritten_candidates(
-    triples: DataFrame,
-    mapping: DataFrame,
-    n_mapping: int | None = None,
-    compact_shuffle: bool = False,
-):
-    """The canonical-rewrite candidate stream BEFORE set-semantics dedup.
-
-    Returns ``(out, key, (d_iri, d_kind, d_dt))``: ``out`` is the rewritten
-    per-mention triple stream with (possibly codec-encoded) columns
-    [subj_b, pred, kind_t, obj_b, obj_lexical, dt_b, conv_id, turn_idx],
-    ``key`` the encoded triple-key column names, and the third element the
-    decoders back to TRIPLES columns. Shared head of
-    :func:`rewrite_triples` (min-provenance set dedup) and
-    :func:`rdfcmap_spark.plans.pipeline.triple_support` (evidence counts) —
-    one implementation of the join strategy and the kind/identity
+    triples: DataFrame, mapping: DataFrame, n_mapping: int | None = None
+) -> DataFrame:
+    """The canonical-rewrite candidate stream BEFORE set-semantics dedup:
+    the per-mention triple stream (TRIPLES columns) with ``subj`` and
+    ``obj_iri`` rewritten through the canonical mapping. Shared head of
+    :func:`rewrite_triples` (min-provenance set dedup) and the KG products
+    of :mod:`rdfcmap_spark.plans.pipeline` (evidence counts, timelines, SFT
+    pairs) — one implementation of the join strategy and the kind/identity
     invariant.
 
     The mapping (merged entities only) usually sits right at the 10MB
@@ -435,101 +428,51 @@ def rewritten_candidates(
     Both joins probe the SAME broadcast subplan (only the join condition
     differs) so ReuseExchange builds it once, halving driver-serial
     broadcast-build time.
-
-    ``compact_shuffle=True`` routes IRIs/datatypes/kinds through the shuffle
-    as tagged fixed-width binaries (functions/encoding.py — ~250 B -> ~120 B
-    per row, lossless, join-equivalent). On a real cluster where the
-    set-semantics shuffle crosses the network, bytes-on-the-wire dominate
-    and this wins; on a single box with in-memory shuffle the per-row
-    encode/decode expressions cost more than they save (measured +20% at
-    0.5M turns, local[8]), hence default False — flip it on for
-    multi-executor deployments.
     """
-    from rdfcmap_spark.functions.encoding import (
-        dec_datatype,
-        dec_iri,
-        dec_kind,
-        enc_datatype,
-        enc_iri,
-        enc_kind,
-    )
-
     if n_mapping is None:
         # mapping comes out of connected_components checkpointed/materialized
         # — one cheap count job over a tiny frame
         n_mapping = mapping.count()
-    ident = lambda c: c  # noqa: E731
-    e_iri, d_iri = (enc_iri, dec_iri) if compact_shuffle else (ident, ident)
-    e_kind, d_kind = (enc_kind, dec_kind) if compact_shuffle else (ident, ident)
-    e_dt, d_dt = (enc_datatype, dec_datatype) if compact_shuffle else (ident, ident)
-
-    menc = mapping.select(
-        e_iri(F.col("entity_id")).alias("entity_b"),
-        e_iri(F.col("canonical_id")).alias("canon_b"),
-    )
-    m = F.broadcast(menc) if n_mapping <= BROADCAST_MAPPING_MAX_ROWS else menc
+    m = mapping.select("entity_id", "canonical_id")
+    if n_mapping <= BROADCAST_MAPPING_MAX_ROWS:
+        m = F.broadcast(m)
     ms, mo = m.alias("ms"), m.alias("mo")
-    enc = triples.select(
-        e_iri(F.col("subj")).alias("subj_b"),
-        F.col("pred"),
-        e_kind(F.col("obj_kind")).alias("kind_t"),
-        e_iri(F.col("obj_iri")).alias("obj_b"),
-        F.col("obj_lexical"),
-        e_dt(F.col("obj_datatype")).alias("dt_b"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-    )
-    out = (
-        enc.join(ms, F.col("subj_b") == F.col("ms.entity_b"), "left")
-        .withColumn("subj_c", F.coalesce(F.col("ms.canon_b"), F.col("subj_b")))
-        .drop("entity_b", "canon_b")
-        .join(mo, F.col("obj_b") == F.col("mo.entity_b"), "left")
-        .withColumn("obj_c", F.coalesce(F.col("mo.canon_b"), F.col("obj_b")))
-        .drop("entity_b", "canon_b")
-        .select(
-            F.col("subj_c").alias("subj_b"),
-            "pred",
-            # kind/identity invariant: obj_kind == 'bnode' iff the (post-
-            # rewrite) object is a skolem urn:uuid node. A [bracket]-marked
-            # mention whose entity canonicalizes to a NAMED vocab node
-            # (e.g. a qudt unit individual via shared-identifier edges) is
-            # no longer a blank node — Jena could not even represent that
-            # combination. Must run BEFORE the set-semantics aggregate
-            # (kind is part of the dedup key).
+    return (
+        triples.join(ms, F.col("subj") == F.col("ms.entity_id"), "left")
+        .withColumn("subj", F.coalesce(F.col("ms.canonical_id"), F.col("subj")))
+        .drop("entity_id", "canonical_id")
+        .join(mo, F.col("obj_iri") == F.col("mo.entity_id"), "left")
+        .withColumn("obj_iri", F.coalesce(F.col("mo.canonical_id"), F.col("obj_iri")))
+        .drop("entity_id", "canonical_id")
+        # kind/identity invariant: obj_kind == 'bnode' iff the (post-
+        # rewrite) object is a skolem urn:uuid node. A [bracket]-marked
+        # mention whose entity canonicalizes to a NAMED vocab node (e.g. a
+        # qudt unit individual via shared-identifier edges) is no longer a
+        # blank node — Jena could not even represent that combination. Must
+        # run BEFORE the set-semantics aggregate (kind is part of the dedup
+        # key).
+        .withColumn(
+            "obj_kind",
             F.when(
-                (d_kind(F.col("kind_t")) == "bnode")
-                & ~d_iri(F.col("obj_c")).startswith("urn:uuid:"),
-                e_kind(F.lit("iri")),
-            )
-            .otherwise(F.col("kind_t"))
-            .alias("kind_t"),
-            F.col("obj_c").alias("obj_b"),
-            "obj_lexical",
-            "dt_b",
-            "conv_id",
-            "turn_idx",
+                (F.col("obj_kind") == "bnode") & ~F.col("obj_iri").startswith("urn:uuid:"),
+                F.lit("iri"),
+            ).otherwise(F.col("obj_kind")),
         )
+        .select(*[f.name for f in TRIPLES.fields])
     )
-    key = ["subj_b", "pred", "kind_t", "obj_b", "obj_lexical", "dt_b"]
-    return out, key, (d_iri, d_kind, d_dt)
 
 
 def rewrite_triples(
-    triples: DataFrame,
-    mapping: DataFrame,
-    n_mapping: int | None = None,
-    compact_shuffle: bool = False,
+    triples: DataFrame, mapping: DataFrame, n_mapping: int | None = None
 ) -> DataFrame:
     """Rewrite subj and obj_iri through the canonical mapping, then enforce
     RDF set semantics (dropDuplicates on the triple key, keeping the min
     provenance — deterministic). Candidate construction (join strategy,
-    size-gated broadcast, codecs, kind/identity invariant) lives in
+    size-gated broadcast, kind/identity invariant) lives in
     :func:`rewritten_candidates`; this function is that stream plus the
     tuned min-provenance set-semantics aggregate.
     """
-    out, key, (d_iri, d_kind, d_dt) = rewritten_candidates(
-        triples, mapping, n_mapping=n_mapping, compact_shuffle=compact_shuffle
-    )
+    out = rewritten_candidates(triples, mapping, n_mapping=n_mapping)
     # provenance min as ONE sortable string: min(struct(...)) is not
     # hash-aggregatable — Spark plans SortAggregate on BOTH sides of the
     # shuffle, fully sorting the wide 6-string-column stream twice (the
@@ -562,13 +505,13 @@ def rewrite_triples(
     # keeps grouping semantics identical (the hash is a function of the key
     # columns, which stay in the key) while the sort compares one LONG
     # instead of six strings — measured 2-3x on the materialization phase.
-    kh = F.xxhash64(*[F.col(c) for c in key]).alias("_kh")
+    kh = F.xxhash64(*TRIPLE_KEY).alias("_kh")
     # Pre-repartition on the hash key so BOTH aggregate passes run
     # post-shuffle: hashpartitioning(_kh) satisfies the aggregate's
     # ClusteredDistribution([_kh, key...]) (subset rule), so EnsureRequirements
     # inserts no further exchange and the partial SortAggregate lands in the
     # post-shuffle stage next to the final one. The wide pre-shuffle stage
-    # (checkpoint scan -> explode -> encode) then carries NO sort buffers and
+    # (checkpoint scan -> explode -> rewrite) then carries NO sort buffers and
     # no per-task aggregation state — at local[32] the partial agg's working
     # set in the wide stage was the main cache/memory-contention term
     # (stage-probe: 2-3x per-task CPU dilation at 4x threads). Post-shuffle
@@ -577,9 +520,9 @@ def rewrite_triples(
     # the dedup factor of the candidate stream is low, so map-side combine
     # was buying almost nothing.
     agg = (
-        out.select(kh, *key, prov_key.alias("_pkv"))
+        out.select(kh, *TRIPLE_KEY, prov_key.alias("_pkv"))
         .repartition(F.col("_kh"))
-        .groupBy("_kh", *key)
+        .groupBy("_kh", *TRIPLE_KEY)
         .agg(F.min("_pkv").alias("_pk"))
     )
     conv_part = F.substring_index(F.col("_pk"), "\x00", 1)
@@ -593,13 +536,4 @@ def rewrite_triples(
     )
     tail = F.substring(F.col("_pk"), F.length(conv_part) + 2, 11)
     turn = F.when(tail.startswith("\x01"), F.substring(tail, 2, 10).cast("int"))
-    return agg.select(
-        d_iri(F.col("subj_b")).alias("subj"),
-        F.col("pred"),
-        d_kind(F.col("kind_t")).alias("obj_kind"),
-        d_iri(F.col("obj_b")).alias("obj_iri"),
-        F.col("obj_lexical"),
-        d_dt(F.col("dt_b")).alias("obj_datatype"),
-        conv.alias("conv_id"),
-        turn.alias("turn_idx"),
-    ).select(*[f.name for f in TRIPLES.fields])
+    return agg.select(*TRIPLE_KEY, conv.alias("conv_id"), turn.alias("turn_idx"))

@@ -1,28 +1,45 @@
-"""The flagship KG-construction pipeline (SURVEY.md §3.1 re-architected).
+"""The flagship KG-construction pipeline, defined once as five layers.
 
-transcripts ── extract (narrow, codegen) ── link (broadcast joins)
-            ── assemble (inline uuid5 minting, no shuffle)
-            ── canonicalize (iterative CC over identity edges)
-            ── materialize (set-dedup + partitioned write + metrics)
+Every layer is a plain ``DataFrame -> DataFrame`` function::
 
-Every stage is a pure DataFrame -> DataFrame function; the whole plan up to
-canonicalization is shuffle-free (scan -> split/explode -> regexp -> broadcast
-probes -> projections), which is what survives a 100 TB input: cost is one
+    transcripts ─[sentences]─ sent ─┬─[raw triples]─────────────────────┐
+                                    └─[identity rows]─ edges ─[mapping]─┴─[canonical candidates]
+
+* **sentences** — :func:`linked_sentences`: extract + broadcast-link, spent
+  columns dropped;
+* **identity rows** — :func:`identity_rows`: the one-scan ``(kind, a, b)``
+  projection, the only definition of "sameAs relation / valid
+  ``dct:identifier`` literal"; :func:`identity_edges` turns it into CC edges;
+* **raw triples** — ``assembly.sentence_triples``;
+* **mapping** — CC over the identity edges (``canonicalize``);
+* **canonical candidates** — ``canonicalize.rewritten_candidates``.
+
+The flagship (:func:`run_pipeline`) and the KG products
+(:func:`triple_support`, :func:`triple_timeline`, :func:`turn_sft_pairs`)
+are tails on one shared head, :func:`canonical_head`. Two materialization
+policies run the same layer functions: in memory (here — persist ``sent``,
+localCheckpoint the identity rows) and snapshot-and-resume
+(:mod:`rdfcmap_spark.plans.staged`, one parquet snapshot per layer).
+
+Up to the set-semantics aggregate the plan is shuffle-free (scan ->
+split/explode -> regexp -> broadcast probes -> projections): cost is one
 pass over the text plus the small CC fixed point over identity edges only.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfcmap_spark import vocab
 from rdfcmap_spark.functions.literals import literal_cols
 from rdfcmap_spark.functions.normalize import normalize_label
+from rdfcmap_spark.ids import instance_iri_col
 from rdfcmap_spark.operators import assembly, canonicalize, linking, mentions
+from rdfcmap_spark.schemas import TRIPLE_KEY
 
 
 @dataclass
@@ -31,11 +48,16 @@ class PipelineResult:
     metrics: dict = field(default_factory=dict)
 
 
-def linked_sentences(transcripts: DataFrame, alias: DataFrame) -> DataFrame:
-    """Sentences with subject/object/predicate all resolved + entity IDs.
+def linked_sentences(transcripts: DataFrame) -> DataFrame:
+    """Sentence layer: sentences with subject/object/predicate all resolved
+    + entity IDs.
 
     Three broadcast probes of the alias dictionary (subject surface, object
-    surface, linking phrase) — no shuffle, no Python.
+    surface, linking phrase) — no shuffle, no Python. The spent columns are
+    dropped (``phrase``/``phrase_norm``: ``pred_iri`` carries the result;
+    ``obj_bnode``: folded into ``obj_kind``) — the materialized layer is
+    re-scanned by every triple family, so every dropped column is paid back
+    per scan.
     """
     sent = mentions.extract_sentences(transcripts)
     sent = sent.withColumn("subj_norm", normalize_label(F.col("subj"))).withColumn(
@@ -58,9 +80,7 @@ def linked_sentences(transcripts: DataFrame, alias: DataFrame) -> DataFrame:
         F.col("label_norm").alias("phrase_norm"),
         F.col("resolved_iri").alias("pred_iri"),
     )
-    from rdfcmap_spark.ids import instance_iri_col
-
-    out = (
+    return (
         sent.join(a(subj_d), "subj_norm", "left")
         .join(a(obj_d), "obj_norm", "left")
         .join(a(pred_d), "phrase_norm", "left")
@@ -86,20 +106,25 @@ def linked_sentences(transcripts: DataFrame, alias: DataFrame) -> DataFrame:
             .when(F.col("obj_bnode"), F.lit("bnode"))
             .otherwise(F.lit("iri")),
         )
+        .drop("phrase", "phrase_norm", "obj_bnode")
     )
-    return out
 
 
-def identity_inputs(sent: DataFrame, checkpoint: bool = True):
-    """(sameas, idents) — the identity families that feed canonicalization,
-    not the output model. ONE scan of the 2 GB-per-2M-turn sentence
-    checkpoint extracts BOTH into a tiny (kind, a, b) frame, checkpointed so
-    the CC machinery's actions (gate count, edge materialization) never
-    touch the wide stream again — materializing sameas and idents separately
-    was two full checkpoint scans (stage-probe measured, 8->32 scaling
-    work)."""
+def _literal_lex():
+    """(obj_lexical, lex_valid) of a sentence's typed-literal token."""
     lit_token = F.concat(F.lit('"'), F.col("lex"), F.lit('"^^xsd:'), F.col("dt_local"))
     obj_lex, _, lex_valid = literal_cols(lit_token)
+    return obj_lex, F.coalesce(lex_valid, F.lit(False))
+
+
+def identity_rows(sent: DataFrame) -> DataFrame:
+    """Identity-rows layer: ONE scan of the sentence layer projects both
+    identity families that feed canonicalization into a tiny
+    ``(kind, a, b)`` frame — ``("sameas", subj, obj)`` for an
+    ``owl:sameAs`` relation, ``("ident", subj, value)`` for a valid
+    ``dct:identifier`` literal. Materializing the two families separately
+    was two full scans of the wide sentence stream."""
+    obj_lex, lex_valid = _literal_lex()
     is_sameas = (
         (F.col("form") == "relation")
         & F.col("obj_entity").isNotNull()
@@ -108,99 +133,64 @@ def identity_inputs(sent: DataFrame, checkpoint: bool = True):
     is_ident = (
         (F.col("form") == "literal")
         & (F.col("pred_iri") == vocab.DCT + "identifier")
-        & F.coalesce(lex_valid, F.lit(False))
+        & lex_valid
     )
-    ident_pre = (
-        sent.select(
-            F.when(is_sameas, F.lit("sameas")).when(is_ident, F.lit("ident")).alias("kind"),
-            F.col("subj_entity").alias("a"),
-            F.when(is_sameas, F.col("obj_entity")).otherwise(obj_lex).alias("b"),
-        )
-        .filter(F.col("kind").isNotNull())
-    )
-    if checkpoint:
-        ident_pre = ident_pre.localCheckpoint()
-    sameas = ident_pre.filter(F.col("kind") == "sameas").select("a", "b")
-    idents = ident_pre.filter(F.col("kind") == "ident").select(
+    return sent.select(
+        F.when(is_sameas, F.lit("sameas")).when(is_ident, F.lit("ident")).alias("kind"),
+        F.col("subj_entity").alias("a"),
+        F.when(is_sameas, F.col("obj_entity")).otherwise(obj_lex).alias("b"),
+    ).filter(F.col("kind").isNotNull())
+
+
+def split_identity_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sameas(a, b), idents(entity_id, value)) from :func:`identity_rows`."""
+    sameas = rows.filter(F.col("kind") == "sameas").select("a", "b")
+    idents = rows.filter(F.col("kind") == "ident").select(
         F.col("a").alias("entity_id"), F.col("b").alias("value")
     )
     return sameas, idents
 
 
+def identity_edges(rows: DataFrame) -> DataFrame:
+    """CC edges(src, dst) from :func:`identity_rows`."""
+    return canonicalize.identity_edges(*split_identity_rows(rows))
+
+
+def canonical_head(
+    transcripts: DataFrame, checkpoint: bool = True
+) -> tuple[DataFrame, DataFrame, int]:
+    """``(raw triples, mapping, n_mapping)`` under the in-memory policy.
+
+    With ``checkpoint`` the sentence layer is persisted ONCE (every triple
+    family and the identity rows branch off it; without it each branch
+    re-runs scan -> extract -> broadcast-link). ``persist`` keeps compressed
+    columnar batches that each family scan column-prunes; a row-format
+    ``localCheckpoint`` was measured 1.8x slower and an off-heap cache 25%
+    slower (PLAN.md). The tiny identity rows ARE localCheckpointed, so the
+    CC machinery's actions never touch the wide stream again.
+
+    The raw triple union is NOT materialized — it fuses straight into the
+    consumer's aggregate, so the candidate stream is touched exactly once
+    (a checkpoint of it was measured to double wall time at 2M turns).
+    """
+    sent = linked_sentences(transcripts)
+    if checkpoint:
+        sent = sent.persist(StorageLevel.MEMORY_AND_DISK)
+        sent.count()  # eager, so downstream branches hit the cache
+    rows = identity_rows(sent)
+    if checkpoint:
+        rows = rows.localCheckpoint()
+    mapping, n_mapping = canonicalize.connected_components_with_count(identity_edges(rows))
+    return assembly.sentence_triples(sent), mapping, n_mapping
+
+
 def run_pipeline(
     transcripts: DataFrame,
-    alias: DataFrame | None = None,
-    with_canonicalization: bool = True,
     checkpoint: bool = True,
     with_visualization: bool = False,
 ) -> PipelineResult:
-    spark = transcripts.sparkSession
-    alias = alias if alias is not None else linking.resolved_alias_df(spark)
-
-    sent = linked_sentences(transcripts, alias)
-    # prune before materialization: phrase/phrase_norm are spent (pred_iri
-    # carries the result) and obj_bnode is folded into obj_kind — the
-    # checkpoint is re-scanned ~6x by the triple families, so every dropped
-    # column is paid back sixfold in memory bandwidth
-    sent = sent.drop("phrase", "phrase_norm", "obj_bnode")
-    if checkpoint:
-        # Materialize the linked-sentence stream ONCE: every downstream
-        # triple family (entities, relations, literals, cardinality,
-        # identity edges) branches off it, and without a checkpoint each
-        # branch would re-run scan -> extract -> broadcast-link from the
-        # source (~9x recompute). This is also the stage boundary the
-        # resume machinery records (SURVEY.md §4 iteration/lineage row).
-        #
-        # HOW it materializes matters at high thread counts: localCheckpoint
-        # stores row-format UnsafeRows (every rescan reads ALL columns),
-        # while persist() stores compressed COLUMNAR batches that each
-        # family scan column-prunes — far less memory traffic on a
-        # bandwidth-saturated box. Measured (interleaved A/B, local[32],
-        # 2M turns, same drift window): checkpoint median 109.1 s vs
-        # persist 60.9 s — 1.8x. SPARK_GRAFT_SENT_CACHE selects:
-        # persist (default) | offheap (columnar cache in off-heap memory,
-        # zero GC tracing of the cached bytes) | checkpoint (row-format,
-        # lineage-truncating — the pre-round-3 behavior).
-        mode = os.environ.get("SPARK_GRAFT_SENT_CACHE", "persist")
-        if mode in ("persist", "offheap"):
-            from pyspark import StorageLevel
-
-            lvl = StorageLevel.OFF_HEAP if mode == "offheap" else StorageLevel.MEMORY_AND_DISK
-            sent = sent.persist(lvl)
-            sent.count()  # eager, so downstream branches hit the cache
-        else:
-            sent = sent.localCheckpoint()
-
-    # --- ALL batch triple families from ONE scan of the checkpointed
-    # linked-sentence stream (entity declarations per mention, relations with
-    # unit rewrite, cardinality satellites, quarantined literals) — see
-    # assembly.sentence_triples. No shuffle until the set-semantics
-    # aggregate: the entity groupBy of the per-family formulation is gone
-    # (per-mention emission + final dedup is set-identical).
-    triples = assembly.sentence_triples(sent)
-
-    sameas, idents = identity_inputs(sent, checkpoint=checkpoint)
-
-    metrics: dict = {}
-    if with_canonicalization:
-        # CC runs over identity edges only (tiny next to the triple stream);
-        # the raw triple union is NOT materialized — it fuses straight into
-        # the set-semantics aggregate of rewrite_triples, so the 10^13-row
-        # candidate stream is touched exactly once (a checkpoint of it was
-        # measured to double wall time at 2M turns: ~4 GB of wide rows
-        # evicts the sentence checkpoint and spills).
-        edges = canonicalize.identity_edges(sameas, idents)
-        mapping, n_mapping = canonicalize.connected_components_with_count(edges)
-        # compact binary shuffle encoding: see rewrite_triples — wins when
-        # the set-semantics shuffle crosses a network or contends for
-        # memory bandwidth, costs encode/decode ALU when it doesn't
-        compact = os.environ.get("SPARK_GRAFT_COMPACT_SHUFFLE", "") == "1"
-        triples = canonicalize.rewrite_triples(
-            triples, mapping, n_mapping=n_mapping, compact_shuffle=compact
-        )
-    else:
-        key = ["subj", "pred", "obj_kind", "obj_iri", "obj_lexical", "obj_datatype"]
-        triples = triples.dropDuplicates(key)
+    """The flagship: canonical head -> min-provenance set dedup."""
+    triples = canonicalize.rewrite_triples(*canonical_head(transcripts, checkpoint))
 
     if with_visualization:
         # --update parity: mint the afv: twin + position triples per
@@ -218,18 +208,15 @@ def run_pipeline(
         )
         triples = triples.unionByName(twins)
 
-    return PipelineResult(triples=triples, metrics=metrics)
+    return PipelineResult(triples=triples)
 
 
-def pipeline_metrics(transcripts: DataFrame, alias: DataFrame | None = None) -> dict:
+def pipeline_metrics(transcripts: DataFrame) -> dict:
     """QA metrics the reference logs as it converts (`CmapUtil.java:450-466`,
     unresolved labels `RdfUtil.java:531-537`) — computed in one aggregate pass.
     """
-    spark = transcripts.sparkSession
-    sent = linked_sentences(transcripts, alias or linking.resolved_alias_df(spark))
-    lit_token = F.concat(F.lit('"'), F.col("lex"), F.lit('"^^xsd:'), F.col("dt_local"))
-    _, _, lex_valid = literal_cols(lit_token)
-    row = sent.agg(
+    _, lex_valid = _literal_lex()
+    row = linked_sentences(transcripts).agg(
         F.count("*").alias("sentences"),
         F.sum(((F.col("form") == "relation") & F.col("subj_res").isNull()).cast("long")).alias(
             "unresolved_subjects"
@@ -238,18 +225,18 @@ def pipeline_metrics(transcripts: DataFrame, alias: DataFrame | None = None) -> 
             ((F.col("form") == "relation") & F.col("obj_norm").isNotNull() & F.col("obj_res").isNull()).cast("long")
         ).alias("unresolved_objects"),
         F.sum((F.col("pred_iri").isNull()).cast("long")).alias("unresolved_phrases"),
-        F.sum(((F.col("form") == "literal") & ~F.coalesce(lex_valid, F.lit(False))).cast("long")).alias(
+        F.sum(((F.col("form") == "literal") & ~lex_valid).cast("long")).alias(
             "quarantined_literals"
         ),
     ).collect()[0]
     return row.asDict()
 
 
-def triple_support(
-    transcripts: DataFrame,
-    alias: DataFrame | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
+def _candidates(transcripts: DataFrame, checkpoint: bool) -> DataFrame:
+    return canonicalize.rewritten_candidates(*canonical_head(transcripts, checkpoint))
+
+
+def triple_support(transcripts: DataFrame, checkpoint: bool = True) -> DataFrame:
     """Evidence counts per canonical triple — the confidence signal a
     corpus-built KG needs for downstream edge pruning and conflict
     resolution (no reference counterpart: one CXL map is one witness; at
@@ -262,52 +249,26 @@ def triple_support(
     candidate stream's per-mention emission multiplicity, and exactly
     mirrorable over the oracle's ``rew`` CTE.
 
-    Scale posture: identical to the flagship pipeline up to the rewrite
-    (shuffle-free extract/link/assemble, CC over identity edges only,
-    size-gated broadcast rewrite joins via
-    :func:`~rdfcmap_spark.operators.canonicalize.rewritten_candidates`);
-    the counting itself is ONE hash aggregate on the triple key (the two
-    distinct counts expand ×3 with map-side partial aggregation — no
-    sort, no window). The candidate stream is touched exactly once.
+    Scale posture: the flagship's :func:`canonical_head` and candidate
+    stream; the counting itself is ONE hash aggregate on the triple key
+    (the two distinct counts expand ×3 with map-side partial aggregation —
+    no sort, no window). The candidate stream is touched exactly once.
     """
-    spark = transcripts.sparkSession
-    alias = alias if alias is not None else linking.resolved_alias_df(spark)
-    sent = linked_sentences(transcripts, alias).drop("phrase", "phrase_norm", "obj_bnode")
-    if checkpoint:
-        from pyspark import StorageLevel
-
-        sent = sent.persist(StorageLevel.MEMORY_AND_DISK)
-        sent.count()
-    triples = assembly.sentence_triples(sent)
-    sameas, idents = identity_inputs(sent, checkpoint=checkpoint)
-    edges = canonicalize.identity_edges(sameas, idents)
-    mapping, n_mapping = canonicalize.connected_components_with_count(edges)
-    out, key, (d_iri, d_kind, d_dt) = canonicalize.rewritten_candidates(
-        triples, mapping, n_mapping=n_mapping
-    )
-    agg = out.groupBy(*key).agg(
+    return _candidates(transcripts, checkpoint).groupBy(*TRIPLE_KEY).agg(
         F.countDistinct(
             F.col("conv_id"), F.coalesce(F.col("turn_idx"), F.lit(-1))
         ).alias("n_turns"),
         F.countDistinct("conv_id").alias("n_convs"),
     )
-    return agg.select(
-        d_iri(F.col("subj_b")).alias("subj"),
-        F.col("pred"),
-        d_kind(F.col("kind_t")).alias("obj_kind"),
-        d_iri(F.col("obj_b")).alias("obj_iri"),
-        F.col("obj_lexical"),
-        d_dt(F.col("dt_b")).alias("obj_datatype"),
-        "n_turns",
-        "n_convs",
-    )
 
 
-def triple_timeline(
-    transcripts: DataFrame,
-    alias: DataFrame | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
+def _provenance(transcripts: DataFrame, checkpoint: bool) -> DataFrame:
+    """Distinct (triple key, conv_id, turn_idx) — map-side combinable,
+    collapses the per-mention multiplicity before any join."""
+    return _candidates(transcripts, checkpoint).select(*TRIPLE_KEY, "conv_id", "turn_idx").distinct()
+
+
+def triple_timeline(transcripts: DataFrame, checkpoint: bool = True) -> DataFrame:
     """Temporal KG: assertion-time bounds per canonical triple — when the
     corpus FIRST and LAST asserted each fact (exact integer microseconds,
     the sessionize/event-funnel timestamp device), plus the distinct-
@@ -316,65 +277,32 @@ def triple_timeline(
     conflict-by-recency resolution (no reference counterpart: one CXL map
     has no time axis).
 
-    Scale posture: identical head to :func:`triple_support` up to the
-    rewrite; then (a) one distinct over (triple key, conv_id, turn_idx) —
-    map-side combinable, collapses the per-mention multiplicity BEFORE any
-    join, (b) one hash join of that provenance frame against the
-    (conv_id, turn_idx) -> ts projection of the input (left join: a
-    provenance without a turn row keeps null bounds rather than dropping
-    the triple), (c) one final hash aggregate. The candidate stream is
-    touched exactly once.
+    Scale posture: the shared head; then (a) the distinct provenance
+    frame, (b) one hash join of it against the (conv_id, turn_idx) -> ts
+    projection of the input (left join: a provenance without a turn row
+    keeps null bounds rather than dropping the triple), (c) one final hash
+    aggregate. The candidate stream is touched exactly once.
 
     Output: TRIPLES key + first_asserted_us, last_asserted_us, n_turns.
     """
-    spark = transcripts.sparkSession
-    alias = alias if alias is not None else linking.resolved_alias_df(spark)
-    sent = linked_sentences(transcripts, alias).drop("phrase", "phrase_norm", "obj_bnode")
-    if checkpoint:
-        from pyspark import StorageLevel
-
-        sent = sent.persist(StorageLevel.MEMORY_AND_DISK)
-        sent.count()
-    triples = assembly.sentence_triples(sent)
-    sameas, idents = identity_inputs(sent, checkpoint=checkpoint)
-    edges = canonicalize.identity_edges(sameas, idents)
-    mapping, n_mapping = canonicalize.connected_components_with_count(edges)
-    out, key, (d_iri, d_kind, d_dt) = canonicalize.rewritten_candidates(
-        triples, mapping, n_mapping=n_mapping
-    )
-    prov = out.select(*key, "conv_id", "turn_idx").distinct()
     ts_us = transcripts.select(
         "conv_id",
         "turn_idx",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_ts_us"),
     )
-    agg = (
-        prov.join(ts_us, ["conv_id", "turn_idx"], "left")
-        .groupBy(*key)
+    return (
+        _provenance(transcripts, checkpoint)
+        .join(ts_us, ["conv_id", "turn_idx"], "left")
+        .groupBy(*TRIPLE_KEY)
         .agg(
             F.min("_ts_us").alias("first_asserted_us"),
             F.max("_ts_us").alias("last_asserted_us"),
             F.count(F.lit(1)).cast("long").alias("n_turns"),
         )
     )
-    return agg.select(
-        d_iri(F.col("subj_b")).alias("subj"),
-        F.col("pred"),
-        d_kind(F.col("kind_t")).alias("obj_kind"),
-        d_iri(F.col("obj_b")).alias("obj_iri"),
-        F.col("obj_lexical"),
-        d_dt(F.col("dt_b")).alias("obj_datatype"),
-        "first_asserted_us",
-        "last_asserted_us",
-        "n_turns",
-    )
 
 
-def turn_sft_pairs(
-    transcripts: DataFrame,
-    alias: DataFrame | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
+def turn_sft_pairs(transcripts: DataFrame, checkpoint: bool = True) -> DataFrame:
     """SFT pairs FROM the KG (round 5 — the graft cell's fusion product:
     transcripts in, training data out): per turn, ``prompt`` = the turn's
     raw text and ``target`` = the canonical triples that turn asserts,
@@ -383,41 +311,23 @@ def turn_sft_pairs(
     model on the pipeline's own outputs (the standard bootstrap loop:
     pipeline labels the corpus, the model distills the pipeline).
 
-    Scale posture: identical head to :func:`triple_support` up to the
-    rewrite (one pass over the text, CC over identity edges only); then
-    one distinct over (triple key, provenance), one hash aggregate per
-    turn building the sorted token list (collect_list is bounded by
-    triples-per-turn — a human turn asserts a handful), one hash join
-    back to the turn text. Output is turn-linear.
+    Scale posture: the shared head; then the distinct provenance frame,
+    one hash aggregate per turn building the sorted token list
+    (collect_list is bounded by triples-per-turn — a human turn asserts a
+    handful), one hash join back to the turn text. Output is turn-linear.
 
     Output: (conv_id, turn_idx, prompt, target, n_triples); turns that
     assert no triple produce no pair (inner-join semantics — empty
     targets teach nothing).
     """
-    spark = transcripts.sparkSession
-    alias = alias if alias is not None else linking.resolved_alias_df(spark)
-    sent = linked_sentences(transcripts, alias).drop("phrase", "phrase_norm", "obj_bnode")
-    if checkpoint:
-        from pyspark import StorageLevel
-
-        sent = sent.persist(StorageLevel.MEMORY_AND_DISK)
-        sent.count()
-    triples = assembly.sentence_triples(sent)
-    sameas, idents = identity_inputs(sent, checkpoint=checkpoint)
-    edges = canonicalize.identity_edges(sameas, idents)
-    mapping, n_mapping = canonicalize.connected_components_with_count(edges)
-    out, key, (d_iri, d_kind, d_dt) = canonicalize.rewritten_candidates(
-        triples, mapping, n_mapping=n_mapping
-    )
-    prov = out.select(*key, "conv_id", "turn_idx").distinct()
     obj_repr = F.when(
-        d_kind(F.col("kind_t")) == "literal",
-        F.concat(F.lit('"'), F.col("obj_lexical"), F.lit('"^^'), d_dt(F.col("dt_b"))),
-    ).otherwise(d_iri(F.col("obj_b")))
-    tok = prov.select(
+        F.col("obj_kind") == "literal",
+        F.concat(F.lit('"'), F.col("obj_lexical"), F.lit('"^^'), F.col("obj_datatype")),
+    ).otherwise(F.col("obj_iri"))
+    tok = _provenance(transcripts, checkpoint).select(
         "conv_id",
         "turn_idx",
-        F.concat_ws("|", d_iri(F.col("subj_b")), F.col("pred"), obj_repr).alias("token"),
+        F.concat_ws("|", F.col("subj"), F.col("pred"), obj_repr).alias("token"),
     )
     agg = tok.groupBy("conv_id", "turn_idx").agg(
         F.array_join(F.array_sort(F.collect_list("token")), " ; ").alias("target"),

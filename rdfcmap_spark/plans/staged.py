@@ -1,19 +1,25 @@
 """Staged, resumable pipeline execution (north rule: "resumable from
 checkpoint with per-partition lineage + metrics").
 
-The flagship pipeline is decomposed into named stages, each persisted as a
-parquet snapshot with an Iceberg-style manifest (sources/sink.py). A stage
-runs only if its snapshot is missing or its **plan fingerprint** changed —
-the fingerprint chains (stage name, parameters, upstream fingerprints), so
-editing an upstream stage invalidates exactly its downstream cone, and a
-re-run after a crash skips every completed stage (T4 tests assert the
-skipped stage's files are untouched).
+The snapshot-and-resume materialization policy for the layers defined once
+in :mod:`rdfcmap_spark.plans.pipeline` (the in-memory policy lives there):
+each layer runs as a named stage persisted as a parquet snapshot with an
+Iceberg-style manifest (sources/sink.py). A stage runs only if its snapshot
+is missing or its **plan fingerprint** changed — the fingerprint chains
+(pipeline version, stage name, upstream fingerprints), so editing an
+upstream stage invalidates exactly its downstream cone, and a re-run after
+a crash skips every completed stage (T4 tests assert the skipped stage's
+files are untouched).
 
-Stage graph (SURVEY.md §3.1 re-architected)::
+Stage graph::
 
-    transcripts ->[extract] sent ->[triples] raw_triples
-                            sent ->[identity] edges ->[mapping] mapping
-    (raw_triples, mapping) ->[materialize] triples  (partitioned by pred bucket)
+    transcripts ->[sentences] sent ->[raw triples] raw_triples
+                              sent ->[identity rows -> edges] identity_edges
+                    identity_edges ->[CC] mapping
+    (raw_triples, mapping) ->[rewrite + set dedup] triples  (partitioned by pred bucket)
+
+The mapping's row count comes from its manifest, so the rewrite's
+broadcast gate needs no count job.
 
 The reference's analog is the embedded ``<rdf-model>`` prior state inside
 the CXL file (`CmapUtil.extractStoredModelFromCxl:367-401`) — its "resume"
@@ -29,13 +35,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rdfcmap_spark import vocab
-from rdfcmap_spark.functions.literals import literal_cols
 from rdfcmap_spark.operators import assembly, canonicalize
 from rdfcmap_spark.plans import pipeline as P
 from rdfcmap_spark.sources import sink
 
-PIPELINE_VERSION = "2"  # bump to invalidate every snapshot (v2: one-scan triple emission)
+PIPELINE_VERSION = "3"  # bump to invalidate every snapshot (v3: spent columns dropped from sent)
 
 
 def _fp(*parts: str) -> str:
@@ -80,18 +84,22 @@ class StagedRun:
 
     def run(self, transcripts: DataFrame) -> DataFrame:
         sent, fp_sent = self._stage(
-            "sent", _fp(self.input_fp), lambda: P.linked_sentences(transcripts, None)
+            "sent", _fp(self.input_fp), lambda: P.linked_sentences(transcripts)
         )
-
-        raw, fp_raw = self._stage("raw_triples", fp_sent, lambda: _raw_triples(sent))
-        edges, fp_edges = self._stage("identity_edges", fp_sent, lambda: _identity_edges(sent))
+        raw, fp_raw = self._stage(
+            "raw_triples", fp_sent, lambda: assembly.sentence_triples(sent)
+        )
+        edges, fp_edges = self._stage(
+            "identity_edges", fp_sent, lambda: P.identity_edges(P.identity_rows(sent))
+        )
         mapping, fp_map = self._stage(
             "mapping", fp_edges, lambda: canonicalize.connected_components(edges)
         )
+        n_mapping = self.metrics["mapping"]["rows"]
         final, _ = self._stage(
             "triples",
             _fp(fp_raw, fp_map),
-            lambda: canonicalize.rewrite_triples(raw, mapping).withColumn(
+            lambda: canonicalize.rewrite_triples(raw, mapping, n_mapping=n_mapping).withColumn(
                 "pred_bucket", F.pmod(F.xxhash64("pred"), F.lit(16))
             ),
             partition_by=["pred_bucket"],
@@ -99,30 +107,6 @@ class StagedRun:
         with open(os.path.join(self.workdir, "run_metrics.json"), "w") as f:
             json.dump({"ran": self.ran, "skipped": self.skipped, "stages": self.metrics}, f, indent=1)
         return final.drop("pred_bucket")
-
-
-def _raw_triples(sent: DataFrame) -> DataFrame:
-    """Triple families off a persisted sent snapshot (mirrors run_pipeline's
-    body, minus canonicalization): one-scan array-explode emission."""
-    return assembly.sentence_triples(sent)
-
-
-def _identity_edges(sent: DataFrame) -> DataFrame:
-    sameas = sent.filter(
-        (F.col("form") == "relation")
-        & (F.col("pred_iri") == vocab.OWL_SAME_AS)
-        & F.col("obj_entity").isNotNull()
-    ).select(F.col("subj_entity").alias("a"), F.col("obj_entity").alias("b"))
-    lit_token = F.concat(F.lit('"'), F.col("lex"), F.lit('"^^xsd:'), F.col("dt_local"))
-    obj_lex, _, lex_valid = literal_cols(lit_token)
-    idents = (
-        sent.filter(F.col("form") == "literal")
-        .withColumn("obj_lexical", obj_lex)
-        .withColumn("lex_valid", F.coalesce(lex_valid, F.lit(False)))
-        .filter((F.col("pred_iri") == vocab.DCT + "identifier") & F.col("lex_valid"))
-        .select(F.col("subj_entity").alias("entity_id"), F.col("obj_lexical").alias("value"))
-    )
-    return canonicalize.identity_edges(sameas, idents)
 
 
 def run_staged(

@@ -35,6 +35,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from rdfcmap_spark.sources.sink import content_fingerprint
 
@@ -46,15 +47,19 @@ CURRENT = "_current"
 _COMMIT_RETRIES = 16
 
 
-def _read_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame:
+def _read_dirs(spark: SparkSession, dirs: list[str], schema: StructType | None) -> DataFrame:
     """Union the member data dirs. Each dir is its own partitioned parquet
     root (Spark refuses one multi-root partition discovery —
     CONFLICTING_DIRECTORY_STRUCTURES), so read per-dir and unionByName:
     per-dir partition columns are recovered normally and the union stays a
-    metadata-only plan node over parallel scans."""
+    metadata-only plan node over parallel scans. ``schema`` is the table's
+    recorded schema: an empty commit writes no data file, so a dir may have
+    nothing to infer a schema from (``None``: infer, for snapshots that
+    predate the recorded schema)."""
     from functools import reduce
 
-    frames = [spark.read.parquet(d) for d in dirs]
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    frames = [reader.parquet(d) for d in dirs]
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 
@@ -133,7 +138,9 @@ def commit(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)
-    written = spark.read.parquet(data_dir)
+    # read back with the batch's own schema: an empty batch writes no data
+    # file to infer one from
+    written = spark.read.schema(df.schema).parquet(data_dir)
     batch_fp = content_fingerprint(written, key_cols)
 
     for _attempt in range(_COMMIT_RETRIES):
@@ -154,7 +161,7 @@ def commit(
             dirs = [data_dir]
             appended = [batch_fp]
 
-        full = _read_dirs(spark, dirs)
+        full = _read_dirs(spark, dirs, written.schema)
         snap = {
             "version": (prev_v or 0) + 1,
             "mode": mode,
@@ -166,6 +173,7 @@ def commit(
             "partition_by": partition_by,
             "partition_counts": _partition_counts(full, partition_by),
             "schema": full.schema.simpleString(),
+            "schema_json": full.schema.json(),
             "committed_at": time.time(),
         }
         try:
@@ -196,4 +204,6 @@ def read_table(
 ) -> tuple[DataFrame, dict]:
     """Current (or time-travelled) table contents + its snapshot."""
     snap = snapshot(table, version)
-    return _read_dirs(spark, snap["data_dirs"]), snap
+    schema = snap.get("schema_json")
+    schema = StructType.fromJson(json.loads(schema)) if schema else None
+    return _read_dirs(spark, snap["data_dirs"], schema), snap

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdfcmap_spark.plans.pipeline import linked_sentences
+from rdfcmap_spark.plans.pipeline import identity_rows, linked_sentences, split_identity_rows
 
 
 def streaming_turn_dedup(transcripts_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -50,7 +50,7 @@ def streaming_triples(transcripts_stream: DataFrame, watermark: str = "1 hour") 
     dedup + CC run as the periodic batch compaction over the sink table
     (:mod:`rdfcmap_spark.streaming.compact`)."""
     deduped = streaming_turn_dedup(transcripts_stream, watermark)
-    sent = linked_sentences(deduped, None)
+    sent = linked_sentences(deduped)
     return _stream_raw_triples(sent)
 
 
@@ -72,25 +72,8 @@ def streaming_identity_observations(
     raw inputs of canonicalization, landed append-only; the hub-star
     construction and the union-find run in the batch compaction (streaming
     them would need an unbounded state store)."""
-    from rdfcmap_spark import vocab
-    from rdfcmap_spark.functions.literals import literal_cols
-
-    sent = linked_sentences(streaming_turn_dedup(transcripts_stream, watermark), None)
-    sameas = sent.filter(
-        (F.col("form") == "relation")
-        & F.col("obj_entity").isNotNull()
-        & (F.col("pred_iri") == vocab.OWL_SAME_AS)
-    ).select(F.col("subj_entity").alias("a"), F.col("obj_entity").alias("b"))
-    lit_token = F.concat(F.lit('"'), F.col("lex"), F.lit('"^^xsd:'), F.col("dt_local"))
-    obj_lex, _, lex_valid = literal_cols(lit_token)
-    idents = (
-        sent.filter(F.col("form") == "literal")
-        .withColumn("obj_lexical", obj_lex)
-        .withColumn("lex_valid", F.coalesce(lex_valid, F.lit(False)))
-        .filter((F.col("pred_iri") == vocab.DCT + "identifier") & F.col("lex_valid"))
-        .select(F.col("subj_entity").alias("entity_id"), F.col("obj_lexical").alias("value"))
-    )
-    return sameas, idents
+    sent = linked_sentences(streaming_turn_dedup(transcripts_stream, watermark))
+    return split_identity_rows(identity_rows(sent))
 
 
 def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:

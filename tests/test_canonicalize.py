@@ -108,32 +108,6 @@ def test_rewrite_broadcast_gate_paths_equal(spark):
     assert "e2" not in subjects and "e3" not in subjects
 
 
-def test_rewrite_compact_shuffle_equivalent(spark):
-    """compact_shuffle=True (binary-encoded shuffle, the multi-executor
-    path) must produce byte-identical triples to the default path."""
-    rows = [
-        ("urn:uuid:675cb430-6cee-34a3-90ba-33a27229ee59", "p:knows", "iri",
-         "urn:uuid:00000000-0000-3000-8000-000000000001", None, None, "c1", 3),
-        ("urn:uuid:00000000-0000-3000-8000-000000000001", "p:title", "literal",
-         None, "thing", "http://www.w3.org/2001/XMLSchema#string", "c2", None),
-        ("http://example.org/vocabterm", "p:sees", "bnode",
-         "urn:uuid:675cb430-6cee-34a3-90ba-33a27229ee59", None, None, None, None),
-    ]
-    triples = spark.createDataFrame(
-        rows,
-        "subj string, pred string, obj_kind string, obj_iri string, "
-        "obj_lexical string, obj_datatype string, conv_id string, turn_idx int",
-    )
-    mapping = spark.createDataFrame(
-        [("urn:uuid:00000000-0000-3000-8000-000000000001",
-          "urn:uuid:675cb430-6cee-34a3-90ba-33a27229ee59")],
-        "entity_id string, canonical_id string",
-    )
-    a = sorted(map(tuple, rewrite_triples(triples, mapping, n_mapping=1).collect()))
-    b = sorted(map(tuple, rewrite_triples(triples, mapping, n_mapping=1, compact_shuffle=True).collect()))
-    assert a == b
-
-
 def test_mapping_invariant_to_partitioning(spark):
     rows = CASES["random_sparse"]
     df1 = spark.createDataFrame(rows, "src string, dst string").repartition(1)

@@ -216,48 +216,6 @@ def test_name_uuid_spark_matches_python_and_sql(spark):
     assert name_uuid("x") == str(_uuid.uuid3(NAMESPACE, "x"))
 
 
-# --- compact shuffle encodings (functions/encoding.py) ----------------------
-
-
-def test_iri_binary_encoding_roundtrip(spark):
-    from rdfcmap_spark.functions import encoding as E
-
-    vals = [
-        "urn:uuid:675cb430-6cee-34a3-90ba-33a27229ee59",
-        "urn:uuid:00000000-0000-0000-0000-000000000000",
-        "http://purl.allotrope.org/ontologies/equipment#AFE_0000354",
-        "urn:uuid:not-a-real-uuid-shape",   # falls back to utf8 tag
-        "plain string ü",
-        None,
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = df.select(
-        "v",
-        E.dec_iri(E.enc_iri(F.col("v"))).alias("rt"),
-        F.length(E.enc_iri(F.col("v"))).alias("n"),
-    ).collect()
-    for r in got:
-        assert r["rt"] == r["v"], r["v"]
-    by_v = {r["v"]: r["n"] for r in got}
-    assert by_v["urn:uuid:675cb430-6cee-34a3-90ba-33a27229ee59"] == 17  # 45 chars -> 17 bytes
-    assert by_v[None] is None
-
-
-def test_datatype_and_kind_encoding_roundtrip(spark):
-    from rdfcmap_spark.functions import encoding as E
-
-    dts = [vocab.XSD_STRING, vocab.XSD_DOUBLE, vocab.XSD_DATETIME, "http://odd/dt", None]
-    df = spark.createDataFrame([(v,) for v in dts], "v string")
-    for r in df.select("v", E.dec_datatype(E.enc_datatype(F.col("v"))).alias("rt"),
-                       F.length(E.enc_datatype(F.col("v"))).alias("n")).collect():
-        assert r["rt"] == r["v"]
-        if r["v"] == vocab.XSD_STRING:
-            assert r["n"] == 1  # closed-set datatypes are ONE byte
-    kdf = spark.createDataFrame([("iri",), ("bnode",), ("literal",), (None,)], "v string")
-    for r in kdf.select("v", E.dec_kind(E.enc_kind(F.col("v"))).alias("rt")).collect():
-        assert r["rt"] == r["v"]
-
-
 # --- X2 breakString (Turtle2CmapConverter.breakString:2339-2366) -------------
 
 

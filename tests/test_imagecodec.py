@@ -55,6 +55,35 @@ def test_png_crc_validated():
         decode_image(bytes(payload))
 
 
+def test_png_truncated_chunk_raises_value_error():
+    """A payload cut inside a chunk (no CRC bytes left) is a typed
+    ValueError, not the struct.error of the CRC read."""
+    payload = encode_png(np.zeros((3, 3), dtype=np.uint8))
+    with pytest.raises(ValueError, match="corrupt PNG"):
+        decode_image(payload[:45])
+
+
+def test_png_truncated_idat_stream_raises_value_error():
+    """A CRC-valid IDAT holding a truncated zlib stream is a typed
+    ValueError, not zlib.error."""
+    raw = zlib.compress(bytes(4 * 4), 6)[:-3]
+    ihdr = struct.pack(">IIBBBBB", 3, 4, 8, 0, 0, 0, 0)
+
+    def chunk(tag, body):
+        crc = zlib.crc32(tag + body) & 0xFFFFFFFF
+        return struct.pack(">I", len(body)) + tag + body + struct.pack(">I", crc)
+
+    payload = PNG_MAGIC + chunk(b"IHDR", ihdr) + chunk(b"IDAT", raw) + chunk(b"IEND", b"")
+    with pytest.raises(ValueError, match="corrupt PNG"):
+        decode_image(payload)
+
+
+def test_bmp_truncated_header_raises_value_error():
+    payload = encode_bmp(np.zeros((2, 2, 3), dtype=np.uint8))
+    with pytest.raises(ValueError, match="corrupt BMP"):
+        decode_image(payload[:20])
+
+
 def test_bmp_roundtrip_padding_and_order():
     rng = np.random.default_rng(5)
     # widths spanning all four padding cases (3w % 4 = 0..3)
@@ -216,6 +245,24 @@ def test_wav_rejects_non_pcm_and_garbage():
     payload[20] = 3  # format tag -> IEEE float
     with pytest.raises(ValueError, match="unsupported WAV"):
         decode_wav(bytes(payload))
+
+
+def test_wav_truncated_data_chunk_raises_value_error():
+    from rdfcmap_spark.functions.audiocodec import decode_wav, encode_wav
+
+    payload = encode_wav(np.arange(10, dtype=np.int16))
+    with pytest.raises(ValueError, match="data chunk truncated"):
+        decode_wav(payload[:-4])
+
+
+def test_wav_short_fmt_chunk_raises_value_error():
+    from rdfcmap_spark.functions.audiocodec import decode_wav
+
+    fmt = struct.pack("<HHI", 1, 1, 8000)  # 8 of the 16 required bytes
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    body += b"data" + struct.pack("<I", 2) + b"\x00\x00"
+    with pytest.raises(ValueError, match="under 16"):
+        decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
 
 
 def test_real_audio_features_measures_decoded_samples(spark):

@@ -46,7 +46,7 @@ def test_column_pruning_reaches_scan(spark):
 
 
 def test_dictionary_joins_are_broadcast(spark):
-    p = plan_of(linked_sentences(transcripts_df(spark, 4, 3), None))
+    p = plan_of(linked_sentences(transcripts_df(spark, 4, 3)))
     assert p.count("BroadcastHashJoin") >= 3  # subj, obj, phrase probes
     assert "SortMergeJoin" not in p
 
@@ -164,15 +164,14 @@ def test_cycle_break_edges_leaves_dag(spark):
 
 
 def test_pipeline_has_exactly_one_shuffle(spark):
-    """The whole extract->link->assemble->dedup pipeline plans as ONE
-    shuffle (the set-semantics aggregate) plus broadcast exchanges for the
-    dictionary probes — the 100 TB contract: cost is one pass over the text
-    plus one keyed shuffle of the candidate triples."""
+    """The whole extract->link->assemble->canonicalize->dedup flagship plans
+    as ONE shuffle (the set-semantics aggregate) plus broadcast exchanges
+    for the dictionary probes and the canonical mapping — the 100 TB
+    contract: cost is one pass over the text plus one keyed shuffle of the
+    candidate triples (CC runs eagerly over the identity edges only)."""
     from rdfcmap_spark.plans.pipeline import run_pipeline
 
-    df = run_pipeline(
-        transcripts_df(spark, 4, 3), with_canonicalization=False, checkpoint=False
-    ).triples
+    df = run_pipeline(transcripts_df(spark, 4, 3), checkpoint=False).triples
     p = plan_of(df)
     import re
 

@@ -88,3 +88,19 @@ def test_snapshot_fingerprint_is_parallelism_invariant(spark, transcripts, tmp_p
     b = sink.write_snapshot(run_pipeline(df16).triples, str(tmp_path / "b"), key_cols=KEY)
     assert a["snapshot_id"] == b["snapshot_id"]
     assert a["row_count"] == b["row_count"]
+
+
+def test_other_pipeline_version_recomputes_every_stage(spark, transcripts, tmp_path, monkeypatch):
+    """Snapshots written under another PIPELINE_VERSION (e.g. the older
+    `sent` schema) are never resumed: every stage recomputes."""
+    from rdfcmap_spark.plans import staged
+
+    wd = str(tmp_path / "w")
+    with monkeypatch.context() as m:
+        m.setattr(staged, "PIPELINE_VERSION", "older")
+        _, run1 = run_staged(spark, transcripts, wd, "fp-a")
+    assert run1.skipped == []
+    out, run2 = run_staged(spark, transcripts, wd, "fp-a")
+    assert run2.skipped == []
+    assert run2.ran == ["sent", "raw_triples", "identity_edges", "mapping", "triples"]
+    assert _triple_set(out) == _triple_set(run_pipeline(transcripts).triples)

@@ -43,7 +43,7 @@ def transcripts_dir(spark, tmp_path_factory):
 def test_stream_triples_equal_batch(spark, transcripts_dir):
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(transcripts_dir)
     got = _run_stream(spark, streaming_triples(stream), "t_stream_triples")
-    batch = _stream_raw_triples(linked_sentences(spark.read.parquet(transcripts_dir), None))
+    batch = _stream_raw_triples(linked_sentences(spark.read.parquet(transcripts_dir)))
     assert {tuple(r) for r in got.select(*KEY).distinct().collect()} == {
         tuple(r) for r in batch.select(*KEY).distinct().collect()
     }
@@ -191,7 +191,7 @@ def test_streaming_nquads_sink_lines_equal_batch(spark, transcripts_dir, tmp_pat
     lines = streaming_triples(stream).select(quad_line_col().alias("line"))
     got = _run_stream(spark, lines, "t_nq_stream")
     batch = (
-        _stream_raw_triples(linked_sentences(spark.read.parquet(transcripts_dir), None))
+        _stream_raw_triples(linked_sentences(spark.read.parquet(transcripts_dir)))
         .select(quad_line_col().alias("line"))
     )
     assert {r["line"] for r in got.collect()} == {r["line"] for r in batch.collect()}

@@ -770,6 +770,67 @@ def test_indexed_incremental_matches_stateless_and_full(spark, tmp_path, monkeyp
     assert got2[8] == got2[3] == got2[5] and got2[9] == 9
 
 
+_IDX_BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+_IDX_OTHER = "one two three four five six seven eight nine ten"
+_IDX_VARIANT = _IDX_BASE + " extra tail words here now"
+
+
+def _canon_map(df):
+    return {r["doc_id"]: r["canonical_id"] for r in df.collect()}
+
+
+def test_indexed_incremental_replayed_batch(spark, tmp_path):
+    """A batch whose texts all already sit in the corpus (a re-delivered
+    batch) has no fresh banding representative, so its index append is
+    EMPTY: it must commit (no schema-inference crash on the empty write),
+    keep the index rows unchanged, and fold like the full recompute."""
+    from rdfcmap_spark.operators import dedup
+    from rdfcmap_spark.sources import table_log
+
+    docs = spark.createDataFrame(
+        [(0, _IDX_BASE), (1, _IDX_OTHER), (2, _IDX_VARIANT),  # corpus + batch 1
+         (3, _IDX_BASE), (4, _IDX_VARIANT)],                   # batch 2: replayed texts
+        "doc_id long, text string",
+    )
+    thresh = 0.3
+    old = docs.filter("doc_id <= 1")
+    t = str(tmp_path / "band_index")
+    r1 = dedup.incremental_dup_groups_indexed(
+        old, dedup.dup_groups(old, min_jaccard=thresh), docs.filter("doc_id = 2"), t,
+        min_jaccard=thresh,
+    )
+    old2 = docs.filter("doc_id <= 2")
+    n_index = table_log.read_table(spark, t)[0].count()
+    map1 = spark.createDataFrame(sorted(_canon_map(r1).items()), "doc_id long, canonical_id long")
+    r2 = dedup.incremental_dup_groups_indexed(
+        old2, map1, docs.filter("doc_id >= 3"), t, min_jaccard=thresh
+    )
+    assert _canon_map(r2) == _canon_map(dedup.dup_groups(docs, min_jaccard=thresh))
+    assert table_log.current_version(t) == 3
+    assert table_log.read_table(spark, t)[0].count() == n_index
+
+
+def test_indexed_incremental_bootstraps_over_empty_corpus(spark, tmp_path):
+    """Bootstrap over an EMPTY corpus commits an empty index snapshot (v1)
+    that reads back with its schema; the first batch then folds like the
+    full recompute of the batch alone."""
+    from rdfcmap_spark.operators import dedup
+    from rdfcmap_spark.sources import table_log
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    batch = spark.createDataFrame(
+        [(0, _IDX_BASE), (1, _IDX_VARIANT), (2, _IDX_OTHER)], "doc_id long, text string"
+    )
+    t = str(tmp_path / "band_index")
+    out = dedup.incremental_dup_groups_indexed(
+        empty, spark.createDataFrame([], "doc_id long, canonical_id long"), batch, t,
+        min_jaccard=0.3,
+    )
+    assert _canon_map(out) == _canon_map(dedup.dup_groups(batch, min_jaccard=0.3))
+    assert table_log.snapshot(t, 1)["row_count"] == 0
+    assert table_log.current_version(t) == 2
+
+
 def test_quality_filter_rules(spark):
     from rdfcmap_spark.operators.textstats import quality_filter
 

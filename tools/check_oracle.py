@@ -2,8 +2,8 @@
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and (where present)
 its ``oracle_sql()`` twin on DuckDB over the same parquet tables, comparing
-row count, column names, and an order-insensitive canonicalized value
-multiset. Usage::
+row count, column names, integer column types, and an order-insensitive
+canonicalized value multiset. Usage::
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -47,6 +47,22 @@ def canon(v):
     return str(v)
 
 
+#: Spark integer types (``DataType.simpleString``)
+_SPARK_INTS = {"tinyint", "smallint", "int", "bigint"}
+
+
+def widened_int_columns(spark_schema, duck_cols, duck_types):
+    """Columns Spark returns as an integer type but DuckDB as HUGEINT or
+    DECIMAL (e.g. an uncast ``sum(BIGINT)``). The value comparison coerces
+    such numbers, so without this check the oracle's type would go unseen."""
+    spark_t = {f.name: f.dataType.simpleString() for f in spark_schema}
+    return [
+        f"{c}: spark {spark_t[c]} vs duck {t}"
+        for c, t in zip(duck_cols, map(str, duck_types))
+        if spark_t.get(c) in _SPARK_INTS and (t == "HUGEINT" or t.startswith("DECIMAL"))
+    ]
+
+
 def rows_to_multiset(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
@@ -71,6 +87,7 @@ def main():
             df = fn(spark, sf_dir)
             spark_rows = df.collect()
             spark_cols = df.columns
+            spark_schema = df.schema
         except Exception:
             print(f"FAIL  {name}: SPARK ERROR")
             traceback.print_exc()
@@ -83,6 +100,7 @@ def main():
         try:
             rel = con.sql(oracles[name])
             duck_cols = [c for c in rel.columns]
+            duck_types = rel.types
             duck_rows = rel.fetchall()
         except Exception:
             print(f"FAIL  {name}: DUCKDB ERROR")
@@ -92,6 +110,9 @@ def main():
         problems = []
         if sorted(spark_cols) != sorted(duck_cols):
             problems.append(f"cols spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
+        widened = widened_int_columns(spark_schema, duck_cols, duck_types)
+        if widened:
+            problems.append("types " + "; ".join(widened))
         if len(spark_rows) != len(duck_rows):
             problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
         if not problems:

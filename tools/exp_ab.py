@@ -7,7 +7,7 @@ arms equally. Reports per-run walls and the median per-arm.
 Usage:
     python tools/exp_ab.py <n_convs> <cpus> <rounds> "<A: k=v,k=v|->" "<B: ...>"
 e.g.
-    python tools/exp_ab.py 256000 32 2 "-" "SPARK_GRAFT_SENT_CACHE=persist"
+    python tools/exp_ab.py 256000 32 2 "-" "SPARK_GRAFT_OFFHEAP_GB=16"
 """
 
 from __future__ import annotations

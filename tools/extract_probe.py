@@ -46,7 +46,7 @@ def main() -> None:
         ).collect()[0]["n"]
 
     def sent_of(tr):
-        return linked_sentences(tr, None).drop("phrase", "phrase_norm", "obj_bnode")
+        return linked_sentences(tr)
 
     consume(sent_of(warm))
     out = {"cpus": cpus}
