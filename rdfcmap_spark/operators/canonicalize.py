@@ -3,9 +3,11 @@
 The reference determines instance-graph membership with a recursive DFS and a
 visited set (`Turtle2CmapConverter.collectNodeIds:781-875`,
 `isBlankNodeWithConnectionToInstanceGraph:936-989`) — single-threaded,
-stack-bound. Here the same fixed point is computed as **iterative frontier
-joins**: min-label propagation with a pointer-jumping step (path halving), so
-convergence is O(log diameter) rounds instead of O(diameter).
+stack-bound. Here the components come from **union-find**: on the driver
+when the edge list fits :data:`DRIVER_CC_MAX_EDGES`, otherwise by
+partition-local union-find contraction rounds that stitch nodes seen in
+several partitions, until the remainder fits the driver gate (see
+:func:`connected_components_with_count`).
 
 Identity edges come from two places (north_star canonicalization semantics):
 
@@ -16,10 +18,10 @@ Identity edges come from two places (north_star canonicalization semantics):
   pairwise self-join blowup (a value shared by k entities yields k-1 edges,
   not k² pairs).
 
-Each iteration ``localCheckpoint()``s to truncate lineage (SURVEY.md §4
-iteration row); convergence is checked on the count of changed labels.
-The representative is the lexicographic min entity id — deterministic at any
-parallelism.
+Each contraction round ``localCheckpoint()``s to truncate lineage (SURVEY.md
+§4 iteration row); the loop ends when the remaining edge count fits the
+driver gate. The representative is the lexicographic min entity id —
+deterministic at any parallelism.
 """
 
 from __future__ import annotations
@@ -169,22 +171,12 @@ def connected_components_with_count(
         return _driver_cc(edges)
     # Size the loop's partitioning to the identity graph, not to
     # spark.sql.shuffle.partitions: the graph is orders of magnitude smaller
-    # than the triple stream (~16 B/row once long-encoded), and running each
-    # of the loop's ~6 stages per iteration with 128 near-empty tasks at
-    # local[32] made scheduling overhead the dominant CC cost
+    # than the triple stream, and running each of the loop's ~6 stages per
+    # iteration with 128 near-empty tasks at local[32] made scheduling
+    # overhead the dominant CC cost
     # (stage-probe measured). ~200k edges/partition keeps tasks ~ms-sized
     # compute with real data while scaling to arbitrarily large graphs.
     p_cc = int(min(2048, max(8, n_edges // 200_000)))
-    # Dictionary-encode node IRIs to longs before the iterative loop: every
-    # propagation round shuffles the full label state, and ~70-char IRI
-    # strings made each round ~10x the bytes (and string-compare cost) of
-    # the same loop over longs — at 2M turns the string loop plus its
-    # checkpoint churn was ~30 s wall with a 50 s GC storm (stage-probe
-    # measured); the long loop moves ~16 B/row. monotonically_increasing_id
-    # is partition-dependent but the OUTPUT is invariant to the id
-    # assignment: components are a property of the edge set, and the
-    # representative is recomputed as min(entity IRI) per component after
-    # convergence — the exact contract of the driver union-find path.
     # --- distributed path: local union-find contraction + boundary stitch.
     #
     # Round k: co-locate edges by src (every edge lives in exactly one

@@ -1,75 +1,105 @@
 """Graph operators beyond connected components (SURVEY.md G2-G5).
 
-* :func:`bfs_hops` — unweighted shortest-path distances from a seed set via
-  iterative frontier joins (G2, `path/PathFinder.java:94`; the reference
-  runs Jena's single-threaded OntTools.findShortestPath per target). The
-  frontier is the only shuffled data; visited nodes drop out, so per-round
-  cost shrinks; ``localCheckpoint`` per round truncates lineage.
-* :func:`hierarchy_levels` — count of distinct transitive ancestors per
-  node over an rdfs:subClassOf edge list (G4/G5,
-  `VisualizationInfoBuilder.determineClassHierarchyLevel:1155-1208`).
-  Ontology hierarchies are tiny → the closure is computed by iterative
-  joins on a broadcast-sized frame, exactly the "precompute closure on
-  driver" disposition of SURVEY §2.8.
+The iterative operators come in two loop shapes:
+
+* **Frontier loops** (semi-naive BFS), all run by :func:`expand`:
+  :func:`bfs_hops`, :func:`khop_sample`, ``pathfinder.bfs_parent_tree``
+  and ``sparql.path_statements``. They replace the reference's per-target
+  searches (`path/PathFinder.java:94`, `SparqlCreator.findNeighbour:
+  537-664`); only the frontier is shuffled and visited nodes drop out.
+* **Count-converged loops**: :func:`transitive_closure`, :func:`kcore`,
+  :func:`ktruss`, :func:`label_propagation` and the CC contraction in
+  ``canonicalize.py`` rebuild a whole frame each round and materialize it
+  with a ``count`` (which, except for label propagation's fixed rounds,
+  decides when to stop). They stay hand-written: each counts a different
+  frame, uses a different storage level and unpersists different frames.
+
+:func:`hierarchy_levels` (G4/G5) is a per-node count over
+:func:`transitive_closure`.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def expand(
+    visited: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    key: list[str],
+    max_rounds: int,
+    first: list[str] | None = None,
+    stop: Callable[[DataFrame], bool] | None = None,
+) -> DataFrame:
+    """Semi-naive frontier loop: ``visited`` seeds the first frontier; for
+    round ``r = 1..max_rounds``, ``step(frontier, r)`` proposes rows (with
+    ``visited``'s columns), those whose ``key`` is already visited are
+    anti-joined away, and the rest become the next frontier and join
+    ``visited``. Returns ``visited``.
+
+    ``first`` keeps one row per key, the least by that column order — a
+    deterministic first-visit tie-break at any parallelism. It runs AFTER
+    the anti-join, so the window only ranks rows that are new (ranking
+    inside ``step`` costs extra jobs). ``stop(new_rows)`` ends the loop
+    early once it returns true.
+
+    Checkpoints are lazy: ``isEmpty`` on the new rows is the one
+    materializing job per round, and later rounds read the checkpointed
+    frames instead of recomputing lineage.
+    """
+    from pyspark.sql import Window
+
+    visited = visited.localCheckpoint(eager=False)
+    frontier = visited
+    for rnd in range(1, max_rounds + 1):
+        new = step(frontier, rnd).join(visited.select(*key), key, "left_anti")
+        if first:
+            w = Window.partitionBy(*key).orderBy(*first)
+            new = new.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+        new = new.localCheckpoint(eager=False)
+        if new.isEmpty():
+            break
+        visited = visited.unionByName(new).localCheckpoint(eager=False)
+        if stop is not None and stop(new):
+            break
+        frontier = new
+    return visited
+
+
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 20) -> DataFrame:
     """edges(src, dst) directed, seeds(node) -> (node, hops) minimal hop
     counts for every node reachable from any seed (seeds at 0)."""
-    known = seeds.select("node").distinct().withColumn("hops", F.lit(0)).localCheckpoint(
-        eager=False
-    )
-    frontier = known
-    for depth in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges.withColumnRenamed("src", "node"), "node")
+    out = edges.withColumnRenamed("src", "node")
+
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
+        return (
+            frontier.select("node")
+            .join(out, "node")
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(known.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(depth))
+            .withColumn("hops", F.lit(hop))
         )
-        # lazy: isEmpty() right below materializes — one job per round
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.isEmpty():
-            break
-        known = known.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return known
+
+    seed = seeds.select("node").distinct().withColumn("hops", F.lit(0))
+    return expand(seed, step, ["node"], max_hops)
 
 
-def hierarchy_levels(subclass_edges: DataFrame, max_depth: int = 15) -> DataFrame:
+def hierarchy_levels(subclass_edges: DataFrame) -> DataFrame:
     """subclass_edges(child, parent) -> (node, level) where level = number
-    of distinct transitive ancestors (the reference's label-size driver).
-
-    Closure by repeated self-join with dedup; cycle-safe because the
-    ancestor set is monotone and bounded.
-    """
-    closure = subclass_edges.select(
-        F.col("child").alias("node"), F.col("parent").alias("anc")
-    ).distinct().localCheckpoint(eager=False)
-    for _ in range(max_depth):
-        step = (
-            closure.alias("c")
-            .join(
-                subclass_edges.select(F.col("child").alias("anc"), F.col("parent").alias("anc2")).alias("e"),
-                "anc",
-            )
-            .select("node", F.col("anc2").alias("anc"))
-            .distinct()
-            .join(closure, ["node", "anc"], "left_anti")
-        )
-        # lazy: isEmpty() right below materializes — one job per round
-        step = step.localCheckpoint(eager=False)
-        if step.isEmpty():
-            break
-        closure = closure.unionByName(step).localCheckpoint(eager=False)
-    return closure.groupBy("node").agg(F.count_distinct("anc").cast("bigint").alias("level"))
+    of distinct transitive ancestors (the reference's label-size driver,
+    `VisualizationInfoBuilder.determineClassHierarchyLevel:1155-1208`); a
+    node on a subclass cycle counts itself. Ontology hierarchies are
+    tiny, so the closure is cheap — SURVEY §2.8's "precompute closure"
+    disposition."""
+    closure = transitive_closure(
+        subclass_edges.select(F.col("child").alias("src"), F.col("parent").alias("dst"))
+    )
+    return closure.groupBy(F.col("src").alias("node")).agg(
+        F.count_distinct("dst").cast("bigint").alias("level")
+    )
 
 
 def shacl_shapes(typed_triples: DataFrame) -> DataFrame:
@@ -289,6 +319,19 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85) -> DataFr
     is cut with a lazy localCheckpoint every 4 rounds. Textbook
     distributed PageRank — no driver-side state.
     """
+    e, nodes = _rank_graph(edges)
+    nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
+    ranks = nodes.crossJoin(F.broadcast(nn)).select(
+        "node", F.floor(F.lit(float(PR_SCALE)) / F.col("n_nodes")).alias("r_nano")
+    )
+    teleport_nano = (1.0 - damping) * PR_SCALE  # exact python double, mirrored in the oracle
+    teleport = F.floor(F.lit(teleport_nano) / F.col("n_nodes"))
+    return _rank_iterations(e, ranks, nodes, nn, teleport, iters, damping)
+
+
+def _rank_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(distinct edges, checkpointed node set) — the inputs both PageRank
+    variants iterate over."""
     e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -296,12 +339,16 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85) -> DataFr
         .distinct()
         .localCheckpoint(eager=False)
     )
+    return e, nodes
+
+
+def _rank_iterations(e, ranks, base, scalar, teleport, iters: int, damping: float) -> DataFrame:
+    """The nano-rank iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`: ``r'(v) = teleport + floor(d·Σ contrib)``
+    over every node of ``base``, where ``teleport`` is a column of
+    ``base`` or of the 1-row ``scalar`` frame (broadcast each round).
+    Lineage is cut with a lazy localCheckpoint every 4 rounds."""
     outd = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
-    nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", F.floor(F.lit(float(PR_SCALE)) / F.col("n_nodes")).alias("r_nano")
-    )
-    teleport_nano = (1.0 - damping) * PR_SCALE  # exact python double, mirrored in the oracle
     for i in range(iters):
         contrib = (
             ranks.join(outd, "node")
@@ -310,12 +357,12 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85) -> DataFr
         )
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
         ranks = (
-            nodes.join(s, "node", "left")
-            .crossJoin(F.broadcast(nn))
+            base.join(s, "node", "left")
+            .crossJoin(F.broadcast(scalar))
             .select(
                 "node",
                 (
-                    F.floor(F.lit(teleport_nano) / F.col("n_nodes"))
+                    teleport
                     + F.floor(F.lit(damping) * F.coalesce(F.col("s"), F.lit(0)).cast("double"))
                 ).alias("r_nano"),
             )
@@ -352,35 +399,24 @@ def khop_sample(
     but the *output* is capped at ``fanouts[h]`` rows per pair, so frontier
     growth is bounded by ``Π fanouts`` per seed regardless of hub skew (the
     window itself is where AQE's skew-split applies for true mega-hubs).
-    Lineage is truncated per hop with lazy localCheckpoints; the
-    convergence probe is the single materializing job per hop.
+    Each hop is one :func:`expand` round keyed on (seed, node).
     """
     from pyspark.sql import Window
 
-    visited = (
-        seeds.select(F.col("node").alias("seed"), F.col("node"))
-        .distinct()
-        .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=False)
-    )
-    frontier = visited
-    for hop, fanout in enumerate(fanouts, start=1):
+    key = F.md5(F.concat_ws("|", F.col("seed"), F.col("src"), F.col("dst")).cast("binary"))
+    w = Window.partitionBy("seed", "src").orderBy(key, "dst")
+
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
         cand = frontier.select("seed", F.col("node").alias("src")).join(edges, "src")
-        key = F.md5(F.concat_ws("|", F.col("seed"), F.col("src"), F.col("dst")).cast("binary"))
-        w = Window.partitionBy("seed", "src").orderBy(key, "dst")
-        samp = cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= fanout)
-        nxt = (
+        samp = cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= fanouts[hop - 1])
+        return (
             samp.select("seed", F.col("dst").alias("node"))
             .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
             .withColumn("hop", F.lit(hop))
-            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return visited
+
+    seed = seeds.select(F.col("node").alias("seed"), "node").distinct().withColumn("hop", F.lit(0))
+    return expand(seed, step, ["seed", "node"], len(fanouts))
 
 
 def _canonical_undirected(edges: DataFrame) -> DataFrame:
@@ -393,6 +429,29 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
     )
 
 
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, deg) over both endpoints of an edge list ``(a, b)``."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionByName(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _symmetrized(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` plus every reversed edge, self-loops dropped,
+    duplicates collapsed — the undirected adjacency that walks and label
+    propagation join against, checkpointed because every round reads it."""
+    return (
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def _oriented_edges(und: DataFrame) -> DataFrame:
     """Degree-orient the canonical undirected edge list: every edge is
     directed from its lower-(degree, node) endpoint to the higher one
@@ -402,10 +461,7 @@ def _oriented_edges(und: DataFrame) -> DataFrame:
     mega-hub contributes almost no out-edges because nearly all its edges
     point INTO it). The rank is a single zero-padded string (deg, node) —
     plain column comparisons, engine-portable, no struct ordering."""
-    nodes = und.select(F.col("a").alias("node")).unionByName(
-        und.select(F.col("b").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    deg = _degrees(und)
     rk = F.concat(
         F.lpad(F.col("deg").cast("string"), 12, "0"),
         F.lit("|"),
@@ -573,22 +629,10 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 12) -> DataFrame:
     localCheckpoints, one materializing count per pass (the convergence
     probe). Output: (node, deg) — the degree within the final core.
     """
-    und = (
-        edges.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = und
+    e = _canonical_undirected(edges).localCheckpoint(eager=False)
     n_prev = -1
     for _ in range(rounds):
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionByName(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node").localCheckpoint(eager=False)
+        keep = _degrees(e).filter(F.col("deg") >= k).select("node").localCheckpoint(eager=False)
         n = keep.count()
         if n == n_prev:
             break
@@ -599,13 +643,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 12) -> DataFrame:
             .select("a", "b")
             .localCheckpoint(eager=False)
         )
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-    )
+    return _degrees(e).filter(F.col("deg") >= k)
 
 
 def label_propagation(edges: DataFrame, rounds: int = 6) -> DataFrame:
@@ -632,13 +670,7 @@ def label_propagation(edges: DataFrame, rounds: int = 6) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetrized(edges)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -678,18 +710,11 @@ def personalized_pagerank(
     one source-key join (AQE splits hub skew), one map-side-combinable
     destination aggregate, 1-row broadcasts for the seed count.
     """
-    e = edges.select("src", "dst").distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _rank_graph(edges)
     sd = seeds.select("node").distinct()
     marked = nodes.join(
         sd.withColumn("is_seed", F.lit(1)), "node", "left"
     ).localCheckpoint(eager=False)
-    outd = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     ns = sd.join(nodes, "node", "left_semi").agg(F.count(F.lit(1)).alias("n_seeds"))
     ranks = marked.crossJoin(F.broadcast(ns)).select(
         "node",
@@ -702,32 +727,10 @@ def personalized_pagerank(
         .alias("r_nano"),
     )
     teleport_nano = (1.0 - damping) * PR_SCALE  # python double, mirrored in the oracle
-    for i in range(iters):
-        contrib = (
-            ranks.join(outd, "node")
-            .join(e, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), F.expr("r_nano div outdeg").alias("c"))
-        )
-        s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            marked.join(s, "node", "left")
-            .crossJoin(F.broadcast(ns))
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("is_seed").isNotNull(),
-                        F.floor(F.lit(teleport_nano) / F.col("n_seeds")),
-                    ).otherwise(F.lit(0))
-                    + F.floor(F.lit(damping) * F.coalesce(F.col("s"), F.lit(0)).cast("double"))
-                ).cast("long").alias("r_nano"),
-            )
-        )
-        if (i + 1) % 4 == 0 and i + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select(
-        "node", "r_nano", F.round(F.col("r_nano") / F.lit(float(PR_SCALE)), 9).alias("pr")
-    )
+    teleport = F.when(
+        F.col("is_seed").isNotNull(), F.floor(F.lit(teleport_nano) / F.col("n_seeds"))
+    ).otherwise(F.lit(0))
+    return _rank_iterations(e, ranks, marked, ns, teleport, iters, damping)
 
 
 def ktruss(edges: DataFrame, k: int = 4, rounds: int = 6) -> DataFrame:
@@ -864,11 +867,7 @@ def adamic_adar(edges: DataFrame, max_center_degree: int = 64) -> DataFrame:
     Output: (a, b, n_common, aa_nano, aa_score).
     """
     und = _canonical_undirected(edges)
-    nodes = und.select(F.col("a").alias("node")).unionByName(
-        und.select(F.col("b").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    centers = deg.filter(
+    centers = _degrees(und).filter(
         (F.col("deg") >= 2) & (F.col("deg") <= max_center_degree)
     ).select(
         F.col("node").alias("w"),
@@ -922,13 +921,7 @@ def random_walks(
 
     Output: (walk_id, start, step, node), steps 0..walk_len.
     """
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetrized(edges)
     starts = (
         sym.select(F.col("src").alias("start"))
         .distinct()

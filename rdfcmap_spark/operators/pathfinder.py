@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from rdfcmap_spark import vocab
 from rdfcmap_spark.functions.normalize import unbreak_py
+from rdfcmap_spark.operators.graph import expand
 
 AFV_HAS_BORDER = vocab.AFV + "hasBorder"
 AFV_SHAPE = vocab.AFV + "shape"
@@ -99,36 +100,19 @@ def bfs_parent_tree(edges: DataFrame, root: str, max_hops: int = 20) -> DataFram
     reported path is deterministic at any parallelism (the reference inherits
     Jena's incidental statement order here — SURVEY §2.5 first-match
     disposition)."""
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(root, 0, None, None)], "node string, hops int, parent string, pred string"
-    ).localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.select("node")
-            .join(edges, F.col("node") == edges.src)
-            .select(
-                F.col("dst").alias("node"),
-                F.lit(hop).alias("hops"),
-                F.col("src").alias("parent"),
-                "pred",
-            )
-            .join(
-                visited.select(F.col("node").alias("_seen")),
-                F.col("node") == F.col("_seen"),
-                "left_anti",
-            )
+
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
+        return frontier.select(F.col("node").alias("src")).join(edges, "src").select(
+            F.col("dst").alias("node"),
+            F.lit(hop).alias("hops"),
+            F.col("src").alias("parent"),
+            "pred",
         )
-        w = Window.partitionBy("node").orderBy("pred", "parent")
-        nxt = (
-            nxt.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        ).localCheckpoint(eager=False)  # isEmpty below materializes
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return visited
+
+    root_row = edges.sparkSession.createDataFrame(
+        [(root, 0, None, None)], "node string, hops int, parent string, pred string"
+    )
+    return expand(root_row, step, ["node"], max_hops, first=["pred", "parent"])
 
 
 def resource_labels(triples: DataFrame) -> DataFrame:

@@ -363,11 +363,31 @@ def user_identity_edges(events: DataFrame) -> DataFrame:
     )
 
 
+def identity_graph(events: DataFrame) -> DataFrame:
+    """The user-identity star edges plus their reverses — the symmetrized
+    ``(src, dst)`` graph that G2's BFS, PageRank, PPR and the k-hop sample
+    walk."""
+    e0 = user_identity_edges(events)
+    return e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def seed_users(events: DataFrame) -> DataFrame:
+    """The G2 seed set: users ``u0``..``u4`` that occur in ``events``."""
+    return (
+        events.filter(F.col("user_id") < 5)
+        .select(F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("node"))
+        .distinct()
+    )
+
+
 def g1_connected_components(events: DataFrame) -> DataFrame:
-    """Min-label connected components over the identity graph — the Spark
-    re-architecture of the reference's recursive DFS membership test
-    (`Turtle2CmapConverter.collectNodeIds:781-875`). Iterative frontier
-    joins with pointer jumping; see operators/canonicalize.py."""
+    """Connected components over the identity graph, each labelled by its
+    min node — the Spark re-architecture of the reference's recursive DFS
+    membership test (`Turtle2CmapConverter.collectNodeIds:781-875`).
+    Partition-local union-find contraction rounds, then a driver
+    union-find once the remainder is small; see operators/canonicalize.py."""
     from rdfcmap_spark.operators.canonicalize import connected_components
 
     edges = user_identity_edges(events)
@@ -516,14 +536,9 @@ def g2_shortest_paths(events: DataFrame) -> DataFrame:
     Jena DFS per target node, single-threaded)."""
     from rdfcmap_spark.operators.graph import bfs_hops
 
-    e0 = user_identity_edges(events)
-    edges = e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    seeds = (
-        events.filter(F.col("user_id") < 5)
-        .select(F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("node"))
-        .distinct()
+    return bfs_hops(identity_graph(events), seed_users(events)).select(
+        "node", F.col("hops").cast("int").alias("hops")
     )
-    return bfs_hops(edges, seeds).select("node", F.col("hops").cast("int").alias("hops"))
 
 
 def g4_hierarchy_levels(spark) -> DataFrame:
@@ -695,11 +710,7 @@ def entity_pagerank(events: DataFrame, iters: int = 10) -> DataFrame:
     arithmetic contract."""
     from rdfcmap_spark.operators.graph import pagerank
 
-    e0 = user_identity_edges(events)
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    return pagerank(edges, iters=iters)
+    return pagerank(identity_graph(events), iters=iters)
 
 
 def khop_neighborhood(events: DataFrame) -> DataFrame:
@@ -708,16 +719,7 @@ def khop_neighborhood(events: DataFrame) -> DataFrame:
     :func:`rdfcmap_spark.operators.graph.khop_sample`."""
     from rdfcmap_spark.operators.graph import khop_sample
 
-    e0 = user_identity_edges(events)
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    seeds = (
-        events.filter(F.col("user_id") < 5)
-        .select(F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("node"))
-        .distinct()
-    )
-    return khop_sample(edges, seeds, fanouts=(3, 2)).select(
+    return khop_sample(identity_graph(events), seed_users(events), fanouts=(3, 2)).select(
         "seed", "node", F.col("hop").cast("int").alias("hop")
     )
 
@@ -806,16 +808,7 @@ def entity_ppr(events: DataFrame, iters: int = 10) -> DataFrame:
     :func:`rdfcmap_spark.operators.graph.personalized_pagerank`."""
     from rdfcmap_spark.operators.graph import personalized_pagerank
 
-    e0 = user_identity_edges(events)
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    seeds = (
-        events.filter(F.col("user_id") < 5)
-        .select(F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("node"))
-        .distinct()
-    )
-    return personalized_pagerank(edges, seeds, iters=iters)
+    return personalized_pagerank(identity_graph(events), seed_users(events), iters=iters)
 
 
 def part_ktruss(lineitem: DataFrame, k: int = 12) -> DataFrame:

@@ -14,7 +14,7 @@ over an edges DataFrame (the reference's recursive DFS is single-threaded
 and stack-bound; BFS over ``edges ∪ reverse(edges)`` finds a shortest
 source→target path with a pinned deterministic tie-break, where Jena's
 iteration order was incidental — SURVEY §2.5 first-match disposition).
-Path reconstruction walks the parent table backward, one tiny join per hop.
+Path reconstruction walks the collected parent table backward on the driver.
 Query-text rendering is driver-side (a generated query is human-sized).
 """
 
@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfcmap_spark import vocab
+from rdfcmap_spark.operators.graph import expand
 
 #: render_sparql collects the full statement list driver-side (the
 #: outside-path closure requires it); gate mirrors pathfinder_report's
@@ -85,45 +86,31 @@ def path_statements(
     )
     und = fwd.unionByName(rev).localCheckpoint()
 
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
+        return frontier.select(F.col("node").alias("src")).join(und, "src").select(
+            F.col("dst").alias("node"),
+            F.lit(hop).alias("hop"),
+            F.col("src").alias("parent"),
+            "pred",
+            "direction",
+        )
+
     visited = spark.createDataFrame(
         [(source, 0, None, None, None)],
         "node string, hop int, parent string, pred string, direction string",
-    ).localCheckpoint()
-    frontier = visited
-    found = source == target
-    for hop in range(1, max_hops + 1):
-        if found:
-            break
-        nxt = (
-            frontier.select("node").join(und, F.col("node") == und.src)
-            .select(
-                F.col("dst").alias("node"),
-                F.lit(hop).alias("hop"),
-                F.col("src").alias("parent"),
-                "pred",
-                "direction",
-            )
-            .join(visited.select(F.col("node").alias("_seen")), F.col("node") == F.col("_seen"), "left_anti")
+    )
+    if source != target:
+        visited = expand(
+            visited, step, ["node"], max_hops,
+            first=["pred", "direction", "parent"],
+            stop=lambda new: not new.filter(F.col("node") == target).isEmpty(),
         )
-        # deterministic first-visit: one row per node by the pinned order
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("node").orderBy("pred", "direction", "parent")
-        nxt = (
-            nxt.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        ).localCheckpoint(eager=False)  # isEmpty below materializes
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-        if nxt.filter(F.col("node") == target).count() > 0:
-            found = True
-    if not found:
+    vrows = {r["node"]: r for r in visited.collect()}
+    if target not in vrows:
         raise ValueError("Could not find path from source to target.")
 
     # backtrack target -> source; each step is a 1-row lookup in the small
     # visited table (path length <= max_hops)
-    vrows = {r["node"]: r for r in visited.collect()}
     steps = []
     node = target
     while node != source:

@@ -12,6 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: collect_set/collect_list aggregates (entity titles, LSH band keys,
+#: per-subject assembly) run in ObjectHashAggregate, which falls back to
+#: SORT-based after only 128 distinct keys per partition by default — our
+#: aggs have 10^4-10^6 small-buffer groups, so raise the fallback so they
+#: stay hash-based (buffers are tiny title/hash sets, not unbounded)
+OBJHASH_FALLBACK_THRESHOLD = 1_000_000
+
 
 def build_session(
     cpus: int | None = None,
@@ -68,15 +75,9 @@ def build_session(
         # deterministic-output requirement (SURVEY.md §4 determinism row):
         # never let partial-aggregation push nondeterminism into floats we hash
         .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-        # collect_set/collect_list aggregates (entity titles, LSH band keys,
-        # per-subject assembly) run in ObjectHashAggregate, which falls back
-        # to SORT-based after only 128 distinct keys per partition by
-        # default — our aggs have 10^4-10^6 small-buffer groups, so raise
-        # the fallback so they stay hash-based (buffers are tiny title/hash
-        # sets, not unbounded)
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OBJHASH_FALLBACK", "1000000"),
+            str(OBJHASH_FALLBACK_THRESHOLD),
         )
     )
     # Off-heap Tungsten memory: the set-semantics aggregate + shuffle of the

@@ -100,3 +100,25 @@ def test_unreachable_target_reports_no_path(spark, fixture_triples):
         l.startswith("#hops = 0\tNo path found from concept map to urn:uuid:ddd <urn:uuid:ddd>")
         for l in lines
     )
+
+
+def test_bfs_parent_tree_same_hop_tie_takes_min_pred_then_parent(spark):
+    from rdfcmap_spark.operators.pathfinder import bfs_parent_tree
+
+    # x is reached at hop 2 from both a and b by the same pred -> parent a;
+    # t is reached at hop 2 from a by "z" and from b by "q" -> pred q wins
+    # over the smaller parent; b -> a never replaces a's hop-1 entry
+    edges = spark.createDataFrame(
+        [("r", "p", "b"), ("r", "p", "a"), ("b", "q", "x"), ("a", "q", "x"),
+         ("a", "z", "t"), ("b", "q", "t"), ("b", "a", "a")],
+        "src string, pred string, dst string",
+    ).repartition(3)
+    tree = bfs_parent_tree(edges, "r").collect()
+    got = {r["node"]: (r["hops"], r["parent"], r["pred"]) for r in tree}
+    assert got == {
+        "r": (0, None, None),
+        "a": (1, "r", "p"),
+        "b": (1, "r", "p"),
+        "x": (2, "a", "q"),
+        "t": (2, "b", "q"),
+    }

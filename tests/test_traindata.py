@@ -543,3 +543,26 @@ def test_triangle_cache_shared_across_consumers(spark):
     finally:
         graph.clear_triangle_cache()
     assert len(graph._TRI_CACHE) == 0
+
+
+def test_triangle_cache_after_source_overwrite(spark, tmp_path):
+    """The cache is keyed on the plan, so a parquet source overwritten in
+    the same session hits the old entry; Spark's cache manager drops the
+    persisted triangles of an overwritten path, so the reused entry
+    recomputes from the new files instead of serving stale triangles."""
+    from rdfcmap_spark.operators import graph
+
+    path = str(tmp_path / "edges")
+    k4 = [(a, b) for a in "abcd" for b in "abcd" if a < b]
+    spark.createDataFrame(k4, "a string, b string").write.parquet(path)
+    graph.clear_triangle_cache()
+    try:
+        assert graph.triangle_count(spark.read.parquet(path)).count() == 4
+        spark.createDataFrame([("a", "b"), ("b", "c")], "a string, b string").write.mode(
+            "overwrite"
+        ).parquet(path)
+        assert graph.triangle_count(spark.read.parquet(path)).collect() == []
+        assert graph.ktruss(spark.read.parquet(path), k=3).collect() == []
+        assert len(graph._TRI_CACHE) == 1
+    finally:
+        graph.clear_triangle_cache()

@@ -6,15 +6,21 @@ row count, column names, integer column types, and an order-insensitive
 canonicalized value multiset. Usage::
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+Exits non-zero when a query fails, when a query name is not registered, or
+when an absolute ``sf_dir`` is not a directory — a typo never passes by
+running nothing.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever is installed or on cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -70,14 +76,22 @@ def rows_to_multiset(cols, rows):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and sys.argv[1].startswith("/") else "/root/testdata/sf0.01"
-    only = [a for a in sys.argv[1:] if not a.startswith("/")]
+    args = sys.argv[1:]
+    if args and os.path.isdir(args[0]):
+        sf_dir = args.pop(0)
+    elif args and args[0].startswith("/"):
+        sys.exit(f"check_oracle: sf_dir {args[0]} is not a directory")
+    queries = entrymod.queries()
+    unknown = [a for a in args if a not in queries]
+    if unknown:
+        sys.exit(f"check_oracle: unknown query name(s): {' '.join(unknown)}")
+    only = set(args)
 
     spark = build_session(app_name="check_oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in queries.items():
