@@ -39,7 +39,10 @@ from rdfcmap_spark.operators import assembly, canonicalize
 from rdfcmap_spark.plans import pipeline as P
 from rdfcmap_spark.sources import sink
 
-PIPELINE_VERSION = "3"  # bump to invalidate every snapshot (v3: spent columns dropped from sent)
+# bump to invalidate every snapshot (v3: spent columns dropped from sent;
+# v4: the partitioned triples snapshot's id hashes pred_bucket as the
+# written bigint, not the int Spark infers when reading the directory back)
+PIPELINE_VERSION = "4"
 
 
 def _fp(*parts: str) -> str:
@@ -80,7 +83,7 @@ class StagedRun:
             "resumed": False,
             "partition_counts": manifest["partition_counts"],
         }
-        return self.spark.read.parquet(path), chained
+        return sink.read_snapshot(self.spark, path)[0], chained
 
     def run(self, transcripts: DataFrame) -> DataFrame:
         sent, fp_sent = self._stage(

@@ -10,8 +10,13 @@ pointer** — over plain parquet, layout-compatible with
 * every commit writes its rows into a fresh ``data/<uuid>/`` directory
   (data files are never rewritten — append is O(new data));
 * a snapshot json (``v<N>.json``) records the member data dirs, the
-  order-insensitive content fingerprint, row count, and per-partition
-  counts (the per-partition lineage/metrics the north rule demands);
+  order-insensitive content fingerprint, row count, per-partition counts
+  (the per-partition lineage/metrics the north rule demands) and schema.
+  The batch's values come from the sink's observed write
+  (:func:`rdfcmap_spark.sources.sink.observed_write`: a ``DataFrame.observe``
+  on the write plus a footer cross-check, no read-back pass), and all three
+  are additive, so an append commits ``previous + batch`` — a commit's
+  cost tracks the batch, never the table;
 * ``_current`` names the live version and is swapped with ``os.replace``
   (atomic on POSIX) — readers never observe a half-written table;
 * ``read_table(..., version=N)`` time-travels by reading exactly the data
@@ -33,11 +38,12 @@ import json
 import os
 import time
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from rdfcmap_spark.sources.sink import content_fingerprint
+from rdfcmap_spark.sources import sink
 
 CURRENT = "_current"
 
@@ -93,15 +99,6 @@ def history(table: str) -> list[dict]:
     return [] if v is None else [snapshot(table, i) for i in range(1, v + 1)]
 
 
-def _partition_counts(df: DataFrame, partition_by: list[str]) -> dict:
-    if not partition_by:
-        return {}
-    rows = df.groupBy(*partition_by).count().collect()
-    return dict(
-        sorted(("|".join(str(r[c]) for c in partition_by), r["count"]) for r in rows)
-    )
-
-
 def commit(
     df: DataFrame,
     table: str,
@@ -128,20 +125,15 @@ def commit(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     partition_by = partition_by or []
     os.makedirs(_meta_dir(table), exist_ok=True)
-    spark = df.sparkSession
 
-    # write the batch into an immutable data dir, then fingerprint what
-    # was actually written (read-back, not the plan). The data dir is
-    # race-free (uuid name); only the metadata commit below can conflict.
+    # write the batch into an immutable data dir; the fingerprint, row
+    # count and partition counts are observed on the write and checked
+    # against the written footers (a mismatch raises sink.SnapshotMismatch
+    # before any snapshot exists). The data dir is race-free (uuid name);
+    # only the metadata commit below can conflict.
     data_dir = os.path.join(table, "data", uuid.uuid4().hex)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(data_dir)
-    # read back with the batch's own schema: an empty batch writes no data
-    # file to infer one from
-    written = spark.read.schema(df.schema).parquet(data_dir)
-    batch_fp = content_fingerprint(written, key_cols)
+    batch = sink.observed_write(df, data_dir, partition_by, key_cols)
+    batch_fp = batch["snapshot_id"]
 
     for _attempt in range(_COMMIT_RETRIES):
         prev_v = current_version(table)
@@ -154,28 +146,27 @@ def commit(
             shutil.rmtree(data_dir, ignore_errors=True)
             return prev
 
-        if mode == "append" and prev:
-            dirs = prev["data_dirs"] + [data_dir]
-            appended = prev.get("appended_fingerprints", []) + [batch_fp]
-        else:
-            dirs = [data_dir]
-            appended = [batch_fp]
-
-        full = _read_dirs(spark, dirs, written.schema)
         snap = {
+            **batch,
             "version": (prev_v or 0) + 1,
             "mode": mode,
-            "data_dirs": dirs,
-            "appended_fingerprints": appended,
+            "data_dirs": [data_dir],
+            "appended_fingerprints": [batch_fp],
             "batch_fingerprint": batch_fp,
-            "snapshot_id": content_fingerprint(full, key_cols),
-            "row_count": full.count(),
-            "partition_by": partition_by,
-            "partition_counts": _partition_counts(full, partition_by),
-            "schema": full.schema.simpleString(),
-            "schema_json": full.schema.json(),
             "committed_at": time.time(),
         }
+        if mode == "append" and prev:
+            # the fingerprint is a sum over rows, so every table-wide value
+            # is the previous snapshot's plus the batch's
+            counts = Counter(prev["partition_counts"])
+            counts.update(batch["partition_counts"])
+            snap.update(
+                data_dirs=prev["data_dirs"] + [data_dir],
+                appended_fingerprints=prev.get("appended_fingerprints", []) + [batch_fp],
+                snapshot_id=str(int(prev["snapshot_id"]) + int(batch_fp)),
+                row_count=prev["row_count"] + batch["row_count"],
+                partition_counts=dict(sorted(counts.items())),
+            )
         try:
             # O_EXCL: exactly one writer owns this version number
             with open(_snap_path(table, snap["version"]), "x") as f:
@@ -204,6 +195,4 @@ def read_table(
 ) -> tuple[DataFrame, dict]:
     """Current (or time-travelled) table contents + its snapshot."""
     snap = snapshot(table, version)
-    schema = snap.get("schema_json")
-    schema = StructType.fromJson(json.loads(schema)) if schema else None
-    return _read_dirs(spark, snap["data_dirs"], schema), snap
+    return _read_dirs(spark, snap["data_dirs"], sink.recorded_schema(snap)), snap
